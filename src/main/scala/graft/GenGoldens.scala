@@ -1,8 +1,8 @@
 package graft
 
+import graft.core.Session
 import graft.ops.{Dedup, Multimodal, Similarity, Text}
 import graft.sources.Sources
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Regenerates the golden TSV fixtures for the deterministic JVM-side
@@ -26,12 +26,7 @@ object GenGoldens {
   private val Dir = "src/test/resources/clinical"
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(4)
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

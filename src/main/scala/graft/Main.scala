@@ -1,7 +1,7 @@
 package graft
 
+import graft.core.Session
 import graft.etl.{JsonDictionary, Pipeline, StaticDictionary}
-import org.apache.spark.sql.SparkSession
 
 /** CLI entry point — the reference's `pre-process` / `process`
   * commands (reference: commands/PreProcess.scala, commands/Process
@@ -26,13 +26,7 @@ object Main {
     val out = flag("-o", "/tmp/graft-out")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
 
     val dict =

@@ -1,10 +1,7 @@
 package graft
 object PlanAudit {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[8]").config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.core.Session.local(8)
     spark.sparkContext.setLogLevel("ERROR")
     val d = "/root/testdata/sf0.001"
     for (q <- Seq("q_filter_project", "q_join_dims", "q_customer_index",

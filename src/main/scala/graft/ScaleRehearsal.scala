@@ -1,7 +1,8 @@
 package graft
 
+import graft.core.Session
 import graft.etl.Indexes
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale rehearsal for the suite's heaviest faces: runs each at its
@@ -32,13 +33,7 @@ object ScaleRehearsal {
     val sel = args.lift(1).map(_.r)
     def on(name: String): Boolean = sel.forall(_.findFirstIn(name).isDefined)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
 
     def timed(label: String)(f: => Long): Double = {

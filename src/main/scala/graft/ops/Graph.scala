@@ -36,54 +36,6 @@ object Graph {
       .distinct()
   }
 
-  /** Open-addressing long→dense-int index (linear probing, power-of-two
-    * capacity) — the [[smallGraphLabels]] primitive-footprint device,
-    * shared by every driver kernel below: node ids dense-index with no
-    * boxed tuples or HashMap entry objects (≤ ~36 B/node). */
-  private final class LongIndex(maxNodes0: Int) {
-    private val maxNodes = math.max(2, maxNodes0)
-    private var cap0 = java.lang.Integer.highestOneBit(maxNodes * 2 - 1) << 1
-    if (cap0 < 16) cap0 = 16
-    private val cap = cap0
-    private val keys = new Array[Long](cap)
-    private val vals = new Array[Int](cap)
-    java.util.Arrays.fill(keys, Long.MinValue) // empty sentinel
-    val ids = new Array[Long](maxNodes)
-    var n = 0
-    def indexOf(k: Long): Int = {
-      var h = java.lang.Long.hashCode(k * -7046029254386353131L) & (cap - 1)
-      while (keys(h) != Long.MinValue && keys(h) != k) h = (h + 1) & (cap - 1)
-      if (keys(h) == k) vals(h)
-      else {
-        keys(h) = k; vals(h) = n; ids(n) = k; n += 1; vals(h)
-      }
-    }
-    def lookup(k: Long): Int = { // -1 when absent (no insert)
-      var h = java.lang.Long.hashCode(k * -7046029254386353131L) & (cap - 1)
-      while (keys(h) != Long.MinValue && keys(h) != k) h = (h + 1) & (cap - 1)
-      if (keys(h) == k) vals(h) else -1
-    }
-  }
-
-  /** Collect a checkpointed 2-long-column edge frame into primitive
-    * arrays (16 B/edge — 8 MB at the 500k default gate). */
-  private def collectEdges(df: DataFrame): (Array[Long], Array[Long]) = {
-    val rows = df.collect()
-    val m = rows.length
-    val a = new Array[Long](m); val b = new Array[Long](m)
-    var i = 0
-    while (i < m) { a(i) = rows(i).getLong(0); b(i) = rows(i).getLong(1); i += 1 }
-    (a, b)
-  }
-
-
-  /** The long-keyed kernels only fire on LongType node columns (every
-    * engine face qualifies); any other key type takes the distributed
-    * loop, whose arithmetic is type-generic. */
-  private def allLong(df: DataFrame, cols: String*): Boolean =
-    cols.forall(c =>
-      df.schema(c).dataType == org.apache.spark.sql.types.LongType)
-
   /** `(85 · s) div 100` on non-negative s without ever forming 85·s
     * (which overflows a long once s > ~1.08e17, inside the kernels'
     * admissible range): for s = 100q + r, 85s = 8500q + 85r, so
@@ -120,29 +72,21 @@ object Graph {
     */
   def bfsDistances(
       edges: DataFrame, sources: DataFrame, maxHops: Int,
-      smallGraphEdges: Long = 500000L): DataFrame = {
+      smallGraphEdges: Long = DriverKernel.MaxEdges): DataFrame = {
     require(maxHops >= 0, "maxHops must be >= 0")
     val sym = symmetric(edges).localCheckpoint()
     val seedCol = sources.columns.head
     val seedsDf = sources
       .select(col(seedCol).cast("long").as("node")).distinct()
-    if (sym.count() <= smallGraphEdges && allLong(sym, "src", "dst")) {
-      // driver kernel (the [[pageRankKernel]] license): hop distances
-      // are a pure function of (edges, seeds, maxHops) — plain BFS
+    val small = DriverKernel.longEdges(sym, smallGraphEdges)
+    if (small.isDefined) {
+      // driver kernel: hop distances are a pure function of
+      // (edges, seeds, maxHops) — plain BFS
       val spark = edges.sparkSession
       import spark.implicits._
-      val rows = sym.select(col("src").cast("long"),
-        col("dst").cast("long")).collect()
+      val g = small.get
+      val (idx, si, di, m) = (g.index, g.src, g.dst, g.m)
       val seedArr = seedsDf.collect().map(_.getLong(0))
-      val m = rows.length
-      val idx = new LongIndex(math.max(2, 2 * m + seedArr.length))
-      val si = new Array[Int](m); val di = new Array[Int](m)
-      var i = 0
-      while (i < m) {
-        si(i) = idx.indexOf(rows(i).getLong(0))
-        di(i) = idx.indexOf(rows(i).getLong(1))
-        i += 1
-      }
       seedArr.foreach(s => idx.indexOf(s): Unit)
       val nNodes = idx.n
       val dist = Array.fill(nNodes)(-1L)
@@ -162,7 +106,7 @@ object Graph {
         h += 1
       }
       return (0 until nNodes).filter(dist(_) >= 0)
-        .map(v => (idx.ids(v), dist(v))).toDF("node", "dist")
+        .map(v => (idx.id(v), dist(v))).toDF("node", "dist")
     }
     var visited = seedsDf
       .withColumn("dist", lit(0L))
@@ -204,7 +148,7 @@ object Graph {
     */
   def ssspInt(
       edges: DataFrame, sources: DataFrame, rounds: Int,
-      smallGraphEdges: Long = 500000L): DataFrame = {
+      smallGraphEdges: Long = DriverKernel.MaxEdges): DataFrame = {
     require(rounds >= 0, "rounds must be >= 0")
     val e = edges.select(col("a"), col("b"), col("w").cast("long").as("w"))
       .filter(col("a") =!= col("b"))
@@ -215,26 +159,15 @@ object Graph {
     val seedCol = sources.columns.head
     val seedsDf = sources
       .select(col(seedCol).cast("long").as("node")).distinct()
-    if (sym.count() <= smallGraphEdges && allLong(sym, "src", "dst")) {
-      // driver kernel (the [[pageRankKernel]] license): exact
-      // synchronous Bellman-Ford over primitive arrays; seed sets are
-      // request-sized, the edge frame is under the gate
+    val small = DriverKernel.longEdges(sym, smallGraphEdges)
+    if (small.isDefined) {
+      // driver kernel: exact synchronous Bellman-Ford over primitive
+      // arrays; seed sets are request-sized
       val spark = edges.sparkSession
       import spark.implicits._
-      val rows = sym.select(col("src").cast("long"),
-        col("dst").cast("long"), col("w")).collect()
+      val g = small.get
+      val (idx, si, di, wA, m) = (g.index, g.src, g.dst, g.w, g.m)
       val seedArr = seedsDf.collect().map(_.getLong(0))
-      val m = rows.length
-      val idx = new LongIndex(math.max(2, 2 * m + seedArr.length))
-      val si = new Array[Int](m); val di = new Array[Int](m)
-      val wA = new Array[Long](m)
-      var i = 0
-      while (i < m) {
-        si(i) = idx.indexOf(rows(i).getLong(0))
-        di(i) = idx.indexOf(rows(i).getLong(1))
-        wA(i) = rows(i).getLong(2)
-        i += 1
-      }
       // dist keyed over seed ∪ graph nodes; ABSENT = unreached (the
       // distributed frame simply has no row) — presence tracked apart.
       // Seeds outside the graph still hold their distance-0 row.
@@ -257,7 +190,7 @@ object Graph {
         dist = nd; present = np
       }
       return (0 until nNodes).filter(present)
-        .map(v => (idx.ids(v), dist(v))).toDF("node", "dist")
+        .map(v => (idx.id(v), dist(v))).toDF("node", "dist")
     }
     var dist = seedsDf
       .withColumn("dist", lit(0L))
@@ -349,12 +282,11 @@ object Graph {
     * checkpoint, which plans without AQE and pays a full
     * shuffle-partition fan-out every round.
     *
-    * Dim-sized graphs take a DRIVER kernel instead: when the oriented
-    * edge count (already paid for by the pinning count) is at most
-    * `smallGraphEdges`, the edges collect to the driver and a
-    * union-find labels them — codebook-class state (≤ ~8 MB at the
-    * default bound), the same license the IVF centroid table and the
-    * PCA power iteration already use. The iterative star loop exists
+    * Dim-sized long-keyed graphs take a DRIVER kernel instead: when
+    * the oriented edge frame passes the [[DriverKernel]] gate, the
+    * edges collect to the driver and a union-find labels them; other
+    * key types take the type-generic star loop, so the kernel never
+    * casts a key. The iterative star loop exists
     * for fact-scale graphs; spending 5+ scheduled rounds on a
     * 2000-edge DBSCAN core graph was pure overhead (measured ~2×
     * on the DBSCAN face). Labels are IDENTICAL by construction
@@ -368,23 +300,25 @@ object Graph {
     *               come back as their own singleton component (the
     *               edge-frame vertices alone otherwise)
     * @param smallGraphEdges oriented-edge-count bound for the driver
-    *               union-find kernel; 0 forces the distributed loop
+    *               union-find kernel ([[DriverKernel]]); 0 forces the
+    *               distributed loop
     * @return (node, component) — component = min node id reachable
     */
   def connectedComponents(
       edges: DataFrame,
       nodes: Option[DataFrame] = None,
       maxIters: Int = 30,
-      smallGraphEdges: Long = 500000L): DataFrame = {
+      smallGraphEdges: Long = DriverKernel.MaxEdges): DataFrame = {
     // orient big→small so small-star's grouping key is well-defined;
     // the checkpoint pins the (possibly expensive) upstream pipeline
     // that produced the edge list
     var cur = symmetric(edges)
       .filter(col("src") > col("dst"))
       .localCheckpoint()
-    var curCount = cur.count()
-    if (curCount <= smallGraphEdges)
-      return smallGraphLabels(edges.sparkSession, cur, nodes)
+    val small = DriverKernel.longEdges(cur, smallGraphEdges)
+    if (small.isDefined)
+      return smallGraphLabels(edges.sparkSession, small.get, nodes)
+    var curCount = cur.count() // the first round's fixpoint baseline
     var prev: Option[DataFrame] = None
     var converged = false
     var i = 0
@@ -459,49 +393,13 @@ object Graph {
     */
   private def smallGraphLabels(
       spark: org.apache.spark.sql.SparkSession,
-      orientedEdges: DataFrame,
+      g: LongEdges,
       nodes: Option[DataFrame]): DataFrame = {
     import spark.implicits._
-    // Primitive-array footprint by construction: edges land in two
-    // long arrays (16 B/edge — 8 MB at the 500k gate), node ids dense-
-    // index through one open-addressing long→int probe table (no boxed
-    // tuples, no HashMap entry objects — ≤ 36 B/node vs ~100+ B/node
-    // boxed), and the union-find itself is one int array. Worst case
-    // at the gate (1M distinct nodes): ~50 MB transient driver heap,
-    // released when the method returns.
-    val rows = orientedEdges
-      .select(col("src").cast("long"), col("dst").cast("long"))
-      .collect()
-    val m = rows.length
-    val srcA = new Array[Long](m)
-    val dstA = new Array[Long](m)
-    var i = 0
-    while (i < m) {
-      srcA(i) = rows(i).getLong(0); dstA(i) = rows(i).getLong(1); i += 1
-    }
-    // open-addressing long→dense-int map (linear probing, power-of-two
-    // capacity ≥ 2× max nodes; 0 sentinel handled via a dedicated slot)
-    val maxNodes = math.max(2, 2 * m)
-    var cap = java.lang.Integer.highestOneBit(maxNodes * 2 - 1) << 1
-    if (cap < 16) cap = 16
-    val keys = new Array[Long](cap)
-    val vals = new Array[Int](cap)
-    java.util.Arrays.fill(keys, Long.MinValue) // empty sentinel
-    val ids = new Array[Long](maxNodes)
-    var nNodes = 0
-    def indexOf(k: Long): Int = {
-      var h = (java.lang.Long.hashCode(k * -7046029254386353131L)) & (cap - 1)
-      while (keys(h) != Long.MinValue && keys(h) != k) h = (h + 1) & (cap - 1)
-      if (keys(h) == k) vals(h)
-      else {
-        keys(h) = k; vals(h) = nNodes; ids(nNodes) = k; nNodes += 1; vals(h)
-      }
-    }
-    val parent = new Array[Int](maxNodes)
-    i = 0
-    while (i < m) { indexOf(srcA(i)); indexOf(dstA(i)); i += 1 } // populate
-    i = 0
-    while (i < nNodes) { parent(i) = i; i += 1 }
+    // the union-find itself is one int array over the dense index
+    val (idx, m) = (g.index, g.m)
+    val nNodes = idx.n
+    val parent = Array.tabulate(nNodes)(identity)
     def find(x: Int): Int = {
       var r = x
       while (parent(r) != r) r = parent(r)
@@ -509,17 +407,17 @@ object Graph {
       while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
       r
     }
-    i = 0
+    var i = 0
     while (i < m) {
-      val ra = find(indexOf(srcA(i)))
-      val rb = find(indexOf(dstA(i)))
+      val ra = find(g.src(i))
+      val rb = find(g.dst(i))
       if (ra != rb) {
         // keep the MIN node id as the root, so the root IS the label
-        if (ids(ra) < ids(rb)) parent(rb) = ra else parent(ra) = rb
+        if (idx.id(ra) < idx.id(rb)) parent(rb) = ra else parent(ra) = rb
       }
       i += 1
     }
-    val labeled = (0 until nNodes).map(n => (ids(n), ids(find(n))))
+    val labeled = (0 until nNodes).map(n => (idx.id(n), idx.id(find(n))))
       .toDF("node", "component")
     nodes match {
       case None => labeled
@@ -584,9 +482,9 @@ object Graph {
   private def pageRankKernel(
       spark: org.apache.spark.sql.SparkSession,
       nodeType: org.apache.spark.sql.types.DataType,
-      srcA: Array[Any], dstA: Array[Any], iters: Int,
+      rows: Array[org.apache.spark.sql.Row], iters: Int,
       seeds: Option[Array[Any]]): DataFrame = {
-    val m = srcA.length
+    val m = rows.length
     // boxed index: node ids here may be ANY key type (the TextRank
     // face runs PageRank over word nodes); graphs under the gate are
     // dim-sized so the boxing is immaterial
@@ -603,7 +501,7 @@ object Graph {
     val si = new Array[Int](m); val di = new Array[Int](m)
     var i = 0
     while (i < m) {
-      si(i) = indexOf(srcA(i)); di(i) = indexOf(dstA(i)); i += 1
+      si(i) = indexOf(rows(i).get(0)); di(i) = indexOf(rows(i).get(1)); i += 1
     }
     val nNodes = ids.length
     val deg = new Array[Long](nNodes)
@@ -663,16 +561,15 @@ object Graph {
   def pageRankInt(
       edges: DataFrame,
       iters: Int = 5,
-      smallGraphEdges: Long = 500000L): DataFrame = {
+      smallGraphEdges: Long = DriverKernel.MaxEdges): DataFrame = {
     require(iters >= 1 && iters <= 50, s"iters out of range: $iters")
     // pin the (possibly expensive) upstream edge derivation ONCE; the
     // count both gates the kernel and is the materializing action
     val symC = graft.core.LazyCheckpoint(symmetric(edges))
-    if (symC.count() <= smallGraphEdges) {
-      val rows = symC.collect()
+    val small = DriverKernel.rows(symC, smallGraphEdges)
+    if (small.isDefined)
       return pageRankKernel(edges.sparkSession, symC.schema("src").dataType,
-        rows.map(_.get(0)), rows.map(_.get(1)), iters, None)
-    }
+        small.get, iters, None)
     // ≥-gate path: symC is already checkpoint-materialized, so both
     // consumers below read its blocks (no persist/unpersist dance)
     val deg = symC.groupBy(col("src")).agg(count(lit(1)).as("deg"))
@@ -749,18 +646,12 @@ object Graph {
     */
   private def pageRankDirectedKernel(
       spark: org.apache.spark.sql.SparkSession,
-      srcA: Array[Long], dstA: Array[Long], iters: Int): DataFrame = {
+      g: LongEdges, iters: Int): DataFrame = {
     import spark.implicits._
-    val m = srcA.length
-    val idx = new LongIndex(math.max(2, 2 * m))
-    val si = new Array[Int](m); val di = new Array[Int](m)
-    var i = 0
-    while (i < m) {
-      si(i) = idx.indexOf(srcA(i)); di(i) = idx.indexOf(dstA(i)); i += 1
-    }
+    val (idx, si, di, m) = (g.index, g.src, g.dst, g.m)
     val nNodes = idx.n
     val outdeg = new Array[Long](nNodes)
-    i = 0; while (i < m) { outdeg(si(i)) += 1L; i += 1 }
+    var i = 0; while (i < m) { outdeg(si(i)) += 1L; i += 1 }
     val n = nNodes.toLong
     require(n > 0, "pageRankIntDirected needs a non-empty edge set")
     val init = Scale / n
@@ -779,24 +670,22 @@ object Graph {
       while (v < nNodes) { next(v) = base + damp85(s(v) + share); v += 1 }
       ranks = next
     }
-    (0 until nNodes).map(v => (idx.ids(v), ranks(v)))
+    (0 until nNodes).map(v => (idx.id(v), ranks(v)))
       .toDF("node", "rank_u")
   }
 
   def pageRankIntDirected(
       edges: DataFrame,
       iters: Int = 5,
-      smallGraphEdges: Long = 500000L): DataFrame = {
+      smallGraphEdges: Long = DriverKernel.MaxEdges): DataFrame = {
     require(iters >= 1 && iters <= 50, s"iters out of range: $iters")
     val eC = graft.core.LazyCheckpoint(
       edges.select(col("a").as("src"), col("b").as("dst"))
         .filter(col("src") =!= col("dst"))
         .distinct())
-    if (eC.count() <= smallGraphEdges && allLong(eC, "src", "dst")) {
-      val (a, b) = collectEdges(
-        eC.select(col("src").cast("long"), col("dst").cast("long")))
-      return pageRankDirectedKernel(edges.sparkSession, a, b, iters)
-    }
+    val small = DriverKernel.longEdges(eC, smallGraphEdges)
+    if (small.isDefined)
+      return pageRankDirectedKernel(edges.sparkSession, small.get, iters)
     val e = eC
     val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     val ed = e.join(outdeg, "src")
@@ -911,22 +800,18 @@ object Graph {
     *         the peeled subgraph
     */
   def kCore(edges: DataFrame, k: Int, rounds: Int = 12,
-      smallGraphEdges: Long = 500000L): DataFrame = {
+      smallGraphEdges: Long = DriverKernel.MaxEdges): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds >= 1 && rounds <= 50, s"rounds out of range: $rounds")
     var e = symmetric(edges).localCheckpoint()
-    if (e.count() <= smallGraphEdges && allLong(e, "src", "dst")) {
-      // driver kernel (the [[pageRankKernel]] license): exactly
-      // `rounds` synchronous peels over primitive arrays
+    val small = DriverKernel.longEdges(e, smallGraphEdges)
+    if (small.isDefined) {
+      // driver kernel: exactly `rounds` synchronous peels over
+      // primitive arrays
       val spark = edges.sparkSession
       import spark.implicits._
-      val (sa, da) = collectEdges(
-        e.select(col("src").cast("long"), col("dst").cast("long")))
-      val m = sa.length
-      val idx = new LongIndex(math.max(2, 2 * m))
-      val si = new Array[Int](m); val di = new Array[Int](m)
-      var i = 0
-      while (i < m) { si(i) = idx.indexOf(sa(i)); di(i) = idx.indexOf(da(i)); i += 1 }
+      val g = small.get
+      val (idx, si, di, m) = (g.index, g.src, g.dst, g.m)
       val nNodes = idx.n
       val alive = new Array[Boolean](m) // oriented-edge liveness
       java.util.Arrays.fill(alive, true)
@@ -944,7 +829,7 @@ object Graph {
       var j = 0
       while (j < m) { if (alive(j)) core(si(j)) += 1L; j += 1 }
       return (0 until nNodes).filter(core(_) > 0L)
-        .map(v => (idx.ids(v), core(v))).toDF("node", "core_deg")
+        .map(v => (idx.id(v), core(v))).toDF("node", "core_deg")
     }
     (1 to rounds).foreach { r =>
       val keep = e.groupBy(col("src")).agg(count(lit(1)).as("__deg"))
@@ -987,17 +872,17 @@ object Graph {
     */
   def personalizedPageRankInt(
       edges: DataFrame, seeds: DataFrame, iters: Int = 5,
-      smallGraphEdges: Long = 500000L): DataFrame = {
+      smallGraphEdges: Long = DriverKernel.MaxEdges): DataFrame = {
     require(iters >= 1 && iters <= 50, s"iters out of range: $iters")
     val symC = graft.core.LazyCheckpoint(symmetric(edges))
-    if (symC.count() <= smallGraphEdges) {
-      val rows = symC.collect()
+    val small = DriverKernel.rows(symC, smallGraphEdges)
+    if (small.isDefined) {
       // seed sets are request-sized by nature (scaladoc above) — the
       // collect is bounded by the same contract the broadcast was
       val seedArr: Array[Any] = seeds.select(col("node")).distinct()
         .collect().map(_.get(0))
       return pageRankKernel(edges.sparkSession, symC.schema("src").dataType,
-        rows.map(_.get(0)), rows.map(_.get(1)), iters, Some(seedArr))
+        small.get, iters, Some(seedArr))
     }
     val deg = symC.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     val ed = symC.join(deg, "src")
@@ -1127,33 +1012,29 @@ object Graph {
     * @return (node, community) — community = converged-or-iters label
     */
   def labelPropagation(edges: DataFrame, iters: Int = 4,
-      smallGraphEdges: Long = 500000L): DataFrame = {
+      smallGraphEdges: Long = DriverKernel.MaxEdges): DataFrame = {
     require(iters >= 1 && iters <= 50, s"iters out of range: $iters")
     val sym = symmetric(edges).localCheckpoint() // reused every round
-    if (sym.count() <= smallGraphEdges && allLong(sym, "src", "dst")) {
-      // driver kernel (the [[pageRankKernel]] license): synchronous
-      // LPA with the self-vote and the (most-frequent, then smallest)
-      // tie rule — vote counting per vertex over its neighbor labels
+    val small = DriverKernel.longEdges(sym, smallGraphEdges)
+    if (small.isDefined) {
+      // driver kernel: synchronous LPA with the self-vote and the
+      // (most-frequent, then smallest) tie rule — vote counting per
+      // vertex over its neighbor labels
       val spark = edges.sparkSession
       import spark.implicits._
-      val (sa, da) = collectEdges(
-        sym.select(col("src").cast("long"), col("dst").cast("long")))
-      val m = sa.length
-      val idx = new LongIndex(math.max(2, 2 * m))
-      val si = new Array[Int](m); val di = new Array[Int](m)
-      var i = 0
-      while (i < m) { si(i) = idx.indexOf(sa(i)); di(i) = idx.indexOf(da(i)); i += 1 }
+      val g = small.get
+      val (idx, si, di, m) = (g.index, g.src, g.dst, g.m)
       val nNodes = idx.n
       // CSR over incoming votes: for vertex v, the labels of its
       // neighbors u (edges u→v) plus its own
       val off = new Array[Int](nNodes + 1)
-      i = 0; while (i < m) { off(di(i) + 1) += 1; i += 1 }
+      var i = 0; while (i < m) { off(di(i) + 1) += 1; i += 1 }
       i = 1; while (i <= nNodes) { off(i) += off(i - 1); i += 1 }
       val adj = new Array[Int](m)
       val cur = off.clone()
       i = 0
       while (i < m) { adj(cur(di(i))) = si(i); cur(di(i)) += 1; i += 1 }
-      var labels = Array.tabulate(nNodes)(v => idx.ids(v))
+      var labels = Array.tabulate(nNodes)(idx.id)
       (1 to iters).foreach { _ =>
         val next = new Array[Long](nNodes)
         var v = 0
@@ -1181,7 +1062,7 @@ object Graph {
         }
         labels = next
       }
-      return (0 until nNodes).map(v => (idx.ids(v), labels(v)))
+      return (0 until nNodes).map(v => (idx.id(v), labels(v)))
         .toDF("node", "community")
     }
     var labels = sym.select(col("src").as("node")).distinct()
@@ -1245,19 +1126,13 @@ object Graph {
     * 500k-edge gate s ≤ 5·10^11, so the product stays ≤ 5·10^17. */
   private def hitsKernel(
       spark: org.apache.spark.sql.SparkSession,
-      srcA: Array[Long], dstA: Array[Long], iters: Int): DataFrame = {
+      g: LongEdges, iters: Int): DataFrame = {
     import spark.implicits._
-    val m = srcA.length
-    val idx = new LongIndex(math.max(2, 2 * m))
-    val si = new Array[Int](m); val di = new Array[Int](m)
-    var i = 0
-    while (i < m) {
-      si(i) = idx.indexOf(srcA(i)); di(i) = idx.indexOf(dstA(i)); i += 1
-    }
+    val (idx, si, di, m) = (g.index, g.src, g.dst, g.m)
     val nNodes = idx.n
     val hasIn = new Array[Boolean](nNodes)
     val hasOut = new Array[Boolean](nNodes)
-    i = 0
+    var i = 0
     while (i < m) { hasOut(si(i)) = true; hasIn(di(i)) = true; i += 1 }
     var h = Array.fill(nNodes)(1000000L)
     var a = Array.fill(nNodes)(1000000L)
@@ -1291,22 +1166,20 @@ object Graph {
       }
       h = hNext
     }
-    (0 until nNodes).map(v => (idx.ids(v), h(v), a(v)))
+    (0 until nNodes).map(v => (idx.id(v), h(v), a(v)))
       .toDF("node", "hub_u", "auth_u")
   }
 
   def hitsInt(edges: DataFrame, iters: Int = 4,
-      smallGraphEdges: Long = 500000L): DataFrame = {
+      smallGraphEdges: Long = DriverKernel.MaxEdges): DataFrame = {
     require(iters >= 1 && iters <= 50, s"iters out of range: $iters")
     val e = edges.select(col("a").as("src"), col("b").as("dst"))
       .filter(col("src") =!= col("dst"))
       .distinct()
       .localCheckpoint()
-    if (e.count() <= smallGraphEdges && allLong(e, "src", "dst")) {
-      val (sa, da) = collectEdges(
-        e.select(col("src").cast("long"), col("dst").cast("long")))
-      return hitsKernel(edges.sparkSession, sa, da, iters)
-    }
+    val small = DriverKernel.longEdges(e, smallGraphEdges)
+    if (small.isDefined)
+      return hitsKernel(edges.sparkSession, small.get, iters)
     val verts = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node")))
       .distinct()

@@ -177,7 +177,7 @@ object Ontology {
     */
   def ancestorClosure(
       edges: DataFrame, maxDoublings: Int = 12,
-      smallGraphEdges: Long = 500000L): DataFrame = {
+      smallGraphEdges: Long = DriverKernel.MaxEdges): DataFrame = {
     require(maxDoublings >= 1 && maxDoublings <= 30,
       s"maxDoublings out of range: $maxDoublings")
     // Cycle detection rides the fixpoint count: on a DAG no path
@@ -196,26 +196,21 @@ object Ontology {
       "ancestorClosure: input has a cycle (a node is its own ancestor)")
     var paths = edges.select(col("child"), col("anc")).distinct()
       .localCheckpoint()
+    // Dim-hierarchy driver kernel (round 18; [[DriverKernel]]): each
+    // doubling round is 3-4 scheduler jobs, and a 20k-node ontology
+    // paid ~40 jobs (~3.4 s at 32 cores) of pure round overhead for a
+    // 267k-row closure. Under the edge gate the pinned DIRECT edges
+    // collect and the exact closure runs as one memoized topological
+    // pass; the budget contract is preserved (throws for depth >
+    // 2^(maxDoublings-1), exactly when the doubling loop would fail
+    // its converged require), cycles — self-loops included — throw the
+    // same requireAcyclic message, and null keys or a closure that
+    // would outgrow the driver bound fall back to the distributed loop.
+    val small = DriverKernel.longEdges(paths, smallGraphEdges)
+      .flatMap(smallClosure(paths.sparkSession, _, maxDoublings))
+    if (small.isDefined) return small.get
     var (n, cyc0) = countAndCyclic(paths)
     requireAcyclic(cyc0) // a self-loop edge is a cycle before any doubling
-    // Dim-hierarchy driver kernel (round 18; the Graph.scala kernel
-    // license): each doubling round is 3-4 scheduler jobs, and a
-    // 20k-node ontology paid ~40 jobs (~3.4 s at 32 cores) of pure
-    // round overhead for a 267k-row closure. Under the edge gate the
-    // pinned DIRECT edges collect and the exact closure runs as one
-    // memoized topological pass; the budget contract is preserved
-    // (throws for depth > 2^(maxDoublings-1), exactly when the
-    // doubling loop would fail its converged require), cycles throw
-    // the same requireAcyclic message, and a closure that would
-    // outgrow the driver bound falls back to the distributed loop.
-    if (n <= smallGraphEdges &&
-        Seq("child", "anc").forall(c => paths.schema(c).dataType ==
-          org.apache.spark.sql.types.LongType)) {
-      smallClosure(paths, maxDoublings) match {
-        case Some(df) => return df
-        case None => () // nulls or driver-bound overflow: loop below
-      }
-    }
     var converged = false
     var i = 0
     while (!converged && i < maxDoublings) {
@@ -243,9 +238,10 @@ object Ontology {
     * gate: one memoized Kahn pass over the collected direct-edge
     * arrays — anc(v) = ∪ over parents p of ({p} ∪ anc(p)), processed
     * parents-first, so every set is built exactly once. Returns None
-    * (→ distributed fallback) on null keys or when the closure would
-    * exceed `maxRows` driver rows (a 500k-edge deep-chain worst case
-    * is quadratic — the cap keeps the kernel codebook-class).
+    * (→ distributed fallback) when the closure would exceed `maxRows`
+    * driver rows (a 500k-edge deep-chain worst case is quadratic — the
+    * cap keeps the kernel codebook-class); null keys never reach it
+    * ([[DriverKernel.longEdges]] returns None for them).
     * Budget + cycle contracts mirror the doubling loop exactly:
     *  - cycle ⟹ the same requireAcyclic failure (Kahn leaves the
     *    cycle's nodes unprocessed);
@@ -255,30 +251,14 @@ object Ontology {
     *    confirming round ≤ maxDoublings ⟺ d ≤ 2^(maxDoublings−1)).
     */
   private def smallClosure(
-      paths: DataFrame, maxDoublings: Int,
-      maxRows: Long = 4000000L): Option[DataFrame] = {
-    val rows = paths.collect()
-    if (rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) return None
-    val m = rows.length
-    // dense-index node ids
-    val idx = scala.collection.mutable.LongMap.empty[Int]
-    val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
-    def indexOf(k: Long): Int = idx.getOrElseUpdate(k, {
-      ids += k; ids.length - 1
-    })
-    val childA = new Array[Int](m); val parentA = new Array[Int](m)
-    var i = 0
-    while (i < m) {
-      childA(i) = indexOf(rows(i).getLong(0))
-      parentA(i) = indexOf(rows(i).getLong(1))
-      i += 1
-    }
-    val nNodes = ids.length
+      spark: org.apache.spark.sql.SparkSession, g: LongEdges,
+      maxDoublings: Int, maxRows: Long = 4000000L): Option[DataFrame] = {
+    val (childA, parentA, m, nNodes) = (g.src, g.dst, g.m, g.index.n)
     // adjacency: children-of(p) over the dependency order (anc(v)
     // needs anc(parent) first), plus per-node pending-parent counts
     val childCount = new Array[Int](nNodes)
     val pending = new Array[Int](nNodes)
-    i = 0
+    var i = 0
     while (i < m) {
       childCount(parentA(i)) += 1; pending(childA(i)) += 1; i += 1
     }
@@ -306,7 +286,7 @@ object Ontology {
         val v = childIdx(j)
         if (anc(v) == null) anc(v) = new java.util.HashSet[java.lang.Long]()
         val before = anc(v).size
-        anc(v).add(ids(p))
+        anc(v).add(g.index.id(p))
         if (pAnc != null) anc(v).addAll(pAnc)
         total += anc(v).size - before
         if (total > maxRows) return None // driver bound: fall back
@@ -330,11 +310,10 @@ object Ontology {
       val s = anc(i)
       if (s != null) {
         val it = s.iterator()
-        while (it.hasNext) { out(k) = (ids(i), it.next()); k += 1 }
+        while (it.hasNext) { out(k) = (g.index.id(i), it.next()); k += 1 }
       }
       i += 1
     }
-    val spark = paths.sparkSession
     import spark.implicits._
     Some(out.toSeq.toDF("child", "anc"))
   }

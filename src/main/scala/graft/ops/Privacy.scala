@@ -130,8 +130,18 @@ object Privacy {
     // null-safe equality: a NULL quasi value is a combination like any
     // other (grouping already treats it so; a plain equi-join would
     // silently drop those rows however large their group)
-    val cond = quasi.map(c => df(c) <=> ok(c)).reduce(_ && _)
-    df.join(ok, cond, "left_semi")
+    semiJoinOn(df, ok, quasi)
+  }
+
+  /** Null-safe left-semi join of `df` onto `ok` (a grouping of `df`
+    * itself) over `keys`. Both sides are aliased, so the predicate
+    * names distinct columns instead of resolving through Spark's
+    * self-join rewrite. */
+  private def semiJoinOn(
+      df: DataFrame, ok: DataFrame, keys: Seq[String]): DataFrame = {
+    val cond = keys
+      .map(c => col(s"__df.`$c`") <=> col(s"__ok.`$c`")).reduce(_ && _)
+    df.as("__df").join(ok.as("__ok"), cond, "left_semi")
   }
 
   /** l-diversity suppression — [[kAnonymize]]'s complement: a large
@@ -156,8 +166,7 @@ object Privacy {
       .agg(countDistinct(col(sensitive)).as("__d"))
       .filter(col("__d") >= l)
       .drop("__d")
-    val cond = quasi.map(c => df(c) <=> ok(c)).reduce(_ && _)
-    df.join(ok, cond, "left_semi")
+    semiJoinOn(df, ok, quasi)
   }
 
   /** t-closeness audit (Li, Li & Venkatasubramanian, ICDE'07) — the

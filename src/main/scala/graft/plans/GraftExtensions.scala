@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 /** Registration surface for graft's custom Catalyst expressions.
   *
   * Two entry points:
-  *  - build-time: `SparkSession.builder().withExtensions(new
+  *  - build-time: the session builder's `withExtensions(new
   *    GraftExtensions)` — the standard extension hook;
   *  - in-session: [[GraftExtensions.register]] on a live session
   *    (temp-function registry), which is what SparkEntry's

@@ -11,13 +11,7 @@ object IvfProbe {
     val sfDir = args(0)
     val reps = args.lift(1).map(_.toInt).getOrElse(2)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.Session.local(cpus.toInt)
     spark.sparkContext.setLogLevel(sys.env.getOrElse("PROBE_LOGLVL", "ERROR"))
     def t[A](label: String)(f: => A): A = {
       val t0 = System.nanoTime()

@@ -12,13 +12,7 @@ object Probe32 {
     val faces = args(1).split(",").toSeq
     val reps = args.lift(2).map(_.toInt).getOrElse(3)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.Session.local(cpus.toInt)
     spark.sparkContext.setLogLevel("ERROR")
     graft.queries.SimilarityQueries.warm(spark, sfDir)
     graft.queries.IndexQueries.warm(spark)

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.WithSpark
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,7 +13,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * chains, isolated seeds, and ties. The DuckDB oracle faces already
   * pin the kernel path against a third engine at the correctness SFs;
   * this spec pins kernel ≡ distributed so the gate constant can never
-  * change a result, only a plan.
+  * change a result, only a plan. Every check runs over long node keys
+  * and, where the operator's distributed loop accepts them, int and
+  * string keys too — rows AND column types must agree, so a kernel
+  * that casts keys (or a gate that routes a non-long graph to a
+  * long-keyed kernel) fails here.
   */
 class GraphKernelSpec extends AnyFunSuite {
   private lazy val spark = WithSpark.session
@@ -28,9 +33,28 @@ class GraphKernelSpec extends AnyFunSuite {
     (hub ++ rest).toDF("a", "b")
   }
 
-  private def assertSame(
-      a: org.apache.spark.sql.DataFrame,
-      b: org.apache.spark.sql.DataFrame, label: String): Unit = {
+  private val AllKeys = Seq("long", "int", "string")
+  // bfsDistances/ssspInt cast seeds to long and labelPropagation packs
+  // labels into a decimal, so their distributed loops need numeric keys
+  private val NumericKeys = Seq("long", "int")
+
+  /** Long keys on every seed; the other key types on the first. */
+  private def cases(seeds: Seq[Long], keyTypes: Seq[String]) =
+    seeds.map(_ -> "long") ++ keyTypes.tail.map(seeds.head -> _)
+
+  /** `df` with its node-key columns re-typed: "long" as built, "int"
+    * cast, "string" prefixed so no key parses as a number. */
+  private def rekey(df: DataFrame, keyType: String, keys: String*) =
+    keys.foldLeft(df)((d, k) => d.withColumn(k, keyType match {
+      case "long" => col(k)
+      case "int" => col(k).cast("int")
+      case "string" => concat(lit("n"), col(k))
+    }))
+
+  private def assertSame(a: DataFrame, b: DataFrame, label: String): Unit = {
+    val (sa, sb) = (a.schema.map(f => f.name -> f.dataType),
+      b.schema.map(f => f.name -> f.dataType))
+    assert(sa == sb, s"$label kernel schema $sa != distributed $sb")
     val x = a.collect().map(_.toSeq).toSet
     val y = b.collect().map(_.toSeq).toSet
     assert(x == y, s"$label kernel != distributed: " +
@@ -38,87 +62,127 @@ class GraphKernelSpec extends AnyFunSuite {
   }
 
   test("pageRankInt kernel equals the distributed loop") {
-    for (seed <- Seq(1L, 2L)) {
-      val e = randomEdges(seed, 40, 80)
+    for ((seed, t) <- cases(Seq(1L, 2L), AllKeys)) {
+      val e = rekey(randomEdges(seed, 40, 80), t, "a", "b")
       assertSame(
         Graph.pageRankInt(e, iters = 4),
         Graph.pageRankInt(e, iters = 4, smallGraphEdges = 0L),
-        s"pageRankInt(seed=$seed)")
+        s"pageRankInt(seed=$seed,$t)")
     }
   }
 
   test("personalizedPageRankInt kernel equals the distributed loop") {
-    val e = randomEdges(3L, 40, 80)
-    val seeds = Seq(1L, 5L, 9999L).toDF("node") // 9999 not a vertex
-    assertSame(
-      Graph.personalizedPageRankInt(e, seeds, iters = 4),
-      Graph.personalizedPageRankInt(e, seeds, iters = 4,
-        smallGraphEdges = 0L),
-      "personalizedPageRankInt")
+    for (t <- AllKeys) {
+      val e = rekey(randomEdges(3L, 40, 80), t, "a", "b")
+      // 9999 not a vertex
+      val seeds = rekey(Seq(1L, 5L, 9999L).toDF("node"), t, "node")
+      assertSame(
+        Graph.personalizedPageRankInt(e, seeds, iters = 4),
+        Graph.personalizedPageRankInt(e, seeds, iters = 4,
+          smallGraphEdges = 0L),
+        s"personalizedPageRankInt($t)")
+    }
   }
 
   test("pageRankIntDirected kernel equals the distributed loop " +
     "(dangling mass included)") {
-    for (seed <- Seq(4L, 5L)) {
-      val e = randomEdges(seed, 40, 80) // directed as-is: sinks exist
+    for ((seed, t) <- cases(Seq(4L, 5L), AllKeys)) {
+      // directed as-is: sinks exist
+      val e = rekey(randomEdges(seed, 40, 80), t, "a", "b")
       assertSame(
         Graph.pageRankIntDirected(e, iters = 4),
         Graph.pageRankIntDirected(e, iters = 4, smallGraphEdges = 0L),
-        s"pageRankIntDirected(seed=$seed)")
+        s"pageRankIntDirected(seed=$seed,$t)")
     }
   }
 
   test("hitsInt kernel equals the distributed loop") {
-    for (seed <- Seq(6L, 7L)) {
-      val e = randomEdges(seed, 30, 60)
+    for ((seed, t) <- cases(Seq(6L, 7L), AllKeys)) {
+      val e = rekey(randomEdges(seed, 30, 60), t, "a", "b")
       assertSame(
         Graph.hitsInt(e, iters = 3),
         Graph.hitsInt(e, iters = 3, smallGraphEdges = 0L),
-        s"hitsInt(seed=$seed)")
+        s"hitsInt(seed=$seed,$t)")
     }
   }
 
   test("ssspInt kernel equals the distributed loop (isolated seed kept)") {
     val rnd = new scala.util.Random(8L)
-    val e = (1 to 80).map(_ => (rnd.nextInt(40).toLong,
+    val e0 = (1 to 80).map(_ => (rnd.nextInt(40).toLong,
       rnd.nextInt(40).toLong, (rnd.nextInt(9) + 1).toLong))
       .toDF("a", "b", "w")
-    val seeds = Seq(0L, 7L, 555L).toDF("node") // 555 isolated
-    assertSame(
-      Graph.ssspInt(e, seeds, rounds = 5),
-      Graph.ssspInt(e, seeds, rounds = 5, smallGraphEdges = 0L),
-      "ssspInt")
+    for (t <- NumericKeys) {
+      val e = rekey(e0, t, "a", "b")
+      // 555 isolated
+      val seeds = rekey(Seq(0L, 7L, 555L).toDF("node"), t, "node")
+      assertSame(
+        Graph.ssspInt(e, seeds, rounds = 5),
+        Graph.ssspInt(e, seeds, rounds = 5, smallGraphEdges = 0L),
+        s"ssspInt($t)")
+    }
   }
 
   test("bfsDistances kernel equals the distributed loop (chain + hops cap)") {
-    val chain = (1L to 20L).map(i => (i, i + 1)).toDF("a", "b")
-    val seeds = Seq(1L, 999L).toDF("node")
-    for (hops <- Seq(0, 3, 25)) {
+    for (t <- NumericKeys; hops <- Seq(0, 3, 25)) {
+      val chain = rekey((1L to 20L).map(i => (i, i + 1)).toDF("a", "b"),
+        t, "a", "b")
+      val seeds = rekey(Seq(1L, 999L).toDF("node"), t, "node")
       assertSame(
         Graph.bfsDistances(chain, seeds, maxHops = hops),
         Graph.bfsDistances(chain, seeds, maxHops = hops,
           smallGraphEdges = 0L),
-        s"bfsDistances(hops=$hops)")
+        s"bfsDistances(hops=$hops,$t)")
     }
   }
 
   test("kCore kernel equals the distributed loop") {
-    for (seed <- Seq(9L, 10L); k <- Seq(2, 3)) {
-      val e = randomEdges(seed, 30, 90)
+    for ((seed, t) <- cases(Seq(9L, 10L), AllKeys); k <- Seq(2, 3)) {
+      val e = rekey(randomEdges(seed, 30, 90), t, "a", "b")
       assertSame(
         Graph.kCore(e, k = k, rounds = 6),
         Graph.kCore(e, k = k, rounds = 6, smallGraphEdges = 0L),
-        s"kCore(seed=$seed,k=$k)")
+        s"kCore(seed=$seed,k=$k,$t)")
     }
   }
 
   test("labelPropagation kernel equals the distributed loop (tie rule)") {
-    for (seed <- Seq(11L, 12L)) {
-      val e = randomEdges(seed, 30, 60)
+    for ((seed, t) <- cases(Seq(11L, 12L), NumericKeys)) {
+      val e = rekey(randomEdges(seed, 30, 60), t, "a", "b")
       assertSame(
         Graph.labelPropagation(e, iters = 3),
         Graph.labelPropagation(e, iters = 3, smallGraphEdges = 0L),
-        s"labelPropagation(seed=$seed)")
+        s"labelPropagation(seed=$seed,$t)")
+    }
+  }
+
+  test("connectedComponents kernel equals the distributed loop " +
+    "(int and string node ids keep their type)") {
+    for (t <- AllKeys) {
+      val e = rekey(randomEdges(13L, 40, 30), t, "a", "b")
+      val universe = rekey((0L until 45L).toDF("id"), t, "id")
+      for (nodes <- Seq(None, Some(universe)))
+        assertSame(
+          Graph.connectedComponents(e, nodes),
+          Graph.connectedComponents(e, nodes, smallGraphEdges = 0L),
+          s"connectedComponents($t,universe=${nodes.isDefined})")
+    }
+  }
+
+  test("ancestorClosure on int and string keys equals the distributed " +
+    "doubling loop") {
+    // long keys: OpsSpec's kernel == doubling differential. Random
+    // multi-parent DAG: node i gets 1-2 parents with smaller ids
+    val rnd = new scala.util.Random(15L)
+    val dag = (2 to 60).flatMap { i =>
+      (0 until 1 + rnd.nextInt(2)).map(_ =>
+        (i.toLong, (1 + rnd.nextInt(i - 1)).toLong))
+    }.distinct.toDF("child", "anc")
+    for (t <- AllKeys.tail) {
+      val e = rekey(dag, t, "child", "anc")
+      assertSame(
+        Ontology.ancestorClosure(e),
+        Ontology.ancestorClosure(e, smallGraphEdges = 0L),
+        s"ancestorClosure($t)")
     }
   }
 }
