@@ -51,8 +51,10 @@ object LazyCheckpoint {
     * materialize every intermediate query stage at construction.
     * The session conf flips for the duration of the (job-free)
     * planning call, which another driver thread planning concurrently
-    * in the same session could observe — frame construction in this
-    * engine is driver-single-threaded.
+    * in the same session could observe. The rule that keeps this safe:
+    * `lazily` frames are built on the calling thread, before any
+    * concurrent action starts ([[ConcurrentActions]] runs actions on
+    * frames built beforehand).
     */
   def lazily(df: DataFrame): DataFrame = {
     val conf = df.sparkSession.conf

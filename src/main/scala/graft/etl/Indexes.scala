@@ -1,5 +1,6 @@
 package graft.etl
 
+import graft.core.ConcurrentActions
 import graft.functions.GraftFunctions
 import graft.ops.{Nest, Ontology, Summary}
 import org.apache.spark.sql.{Column, DataFrame}
@@ -719,16 +720,21 @@ object Indexes {
   private def termFrames(in: ClinicalInputs): Seq[DataFrame] =
     Seq(in.hpoTerms, in.mondoTerms, in.icdTerms, in.duoTerms)
 
+  /** Writes the catalog's 16 tables as concurrent jobs
+    * ([[graft.core.ConcurrentActions]]); no table depends on another. */
   def writeClinicalCatalog(in: ClinicalInputs, dir: String): Unit = {
-    EntityNames.zip(entityFrames(in)).foreach { case (name, df) =>
-      df.withColumn("__study_pt", col("study_id"))
-        .repartition(col("__study_pt"))
-        .write.mode("overwrite").partitionBy("__study_pt")
-        .parquet(s"$dir/$name")
+    val entityWrites = EntityNames.zip(entityFrames(in)).map {
+      case (name, df) => () =>
+        df.withColumn("__study_pt", col("study_id"))
+          .repartition(col("__study_pt"))
+          .write.mode("overwrite").partitionBy("__study_pt")
+          .parquet(s"$dir/$name")
     }
-    TermNames.zip(termFrames(in)).foreach { case (name, df) =>
-      df.write.mode("overwrite").parquet(s"$dir/$name")
+    val termWrites = TermNames.zip(termFrames(in)).map {
+      case (name, df) => () =>
+        df.write.mode("overwrite").parquet(s"$dir/$name")
     }
+    ConcurrentActions.run(in.donor.sparkSession, entityWrites ++ termWrites)
   }
 
   /** Partition-pruned read of a `__study_pt`-partitioned table that

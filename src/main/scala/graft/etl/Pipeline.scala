@@ -1,5 +1,6 @@
 package graft.etl
 
+import graft.core.ConcurrentActions
 import graft.sources.{Sinks, Sources}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -66,10 +67,16 @@ object Pipeline {
     "followup" -> "follow_up.tsv", "exposure" -> "exposure.tsv",
     "family" -> "family.tsv", "familyhistory" -> "family_history.tsv")
 
-  /** Stage 1: TSV → pre-processed parquet. Returns the frames too so
-    * callers can continue without re-reading. The dictionary resolves
+  /** Stage 1: TSV → pre-processed parquet. The dictionary resolves
     * per-entity whitelists at the metadata's dictionaryVersion
-    * (reference: PreProcessETL.scala:56-66). */
+    * (reference: PreProcessETL.scala:56-66). The 12 entity writes are
+    * independent and run as concurrent jobs
+    * ([[graft.core.ConcurrentActions]]).
+    *
+    * Also returns each entity's pre-processed frame. The frames are
+    * lazy: a caller that acts on them (as [[processStage]] does)
+    * re-reads the TSVs and re-mints the ids; it does not read the
+    * parquet this stage wrote. */
   def preProcessStage(
       spark: SparkSession, inputDir: String, stageDir: String,
       resolver: PreProcess.IdResolver = PreProcess.HashDerivedIds,
@@ -83,14 +90,15 @@ object Pipeline {
       "study_version" -> meta.getString(1),
       "study_version_creation_date" -> meta.getString(2))
     val schemas = dictionary.schemas(meta.getString(0))
-    EntityFiles.map { case (entity, fileName) =>
-      val raw = Sources.tsv(spark, s"$inputDir/$fileName")
-      val processed = PreProcess.preProcessEntity(
-        fileName, raw, schemas(entity), resolver,
-        studyMeta = stamps)
-      Sinks.parquet(processed, s"$stageDir/$entity")
-      entity -> processed
-    }
+    ConcurrentActions.run(spark, EntityFiles.toSeq.map {
+      case (entity, fileName) => () =>
+        val raw = Sources.tsv(spark, s"$inputDir/$fileName")
+        val processed = PreProcess.preProcessEntity(
+          fileName, raw, schemas(entity), resolver,
+          studyMeta = stamps)
+        Sinks.parquet(processed, s"$stageDir/$entity")
+        entity -> processed
+    }).toMap
   }
 
   /** Stage 2: pre-processed entities + terms → three nested indexes →
@@ -115,15 +123,15 @@ object Pipeline {
       duoTerms = Sources.jsonLines(
         spark, s"$inputDir/duo_terms.jsonl.gz", Indexes.TermSchema))
     // shared sub-frames computed once, persisted across the three
-    // writes, released after (the reference recomputes them per index)
+    // writes, released after (the reference recomputes them per index);
+    // the three writes run as concurrent jobs
     val (products, release) = Indexes.buildAll(in)
     try {
-      Sinks.partitionedJson(products("donors"), s"$outDir/donors",
-        Seq("study_id"))
-      Sinks.partitionedJson(products("studies"), s"$outDir/studies",
-        Seq("study_id"))
-      Sinks.partitionedJson(products("files"), s"$outDir/files",
-        Seq("study_id"))
+      ConcurrentActions.run(spark, Seq("donors", "studies", "files").map {
+        name => () =>
+          Sinks.partitionedJson(products(name), s"$outDir/$name",
+            Seq("study_id"))
+      })
     } finally release()
   }
 

@@ -878,10 +878,14 @@ object Graph {
     val small = DriverKernel.rows(symC, smallGraphEdges)
     if (small.isDefined) {
       // seed sets are request-sized by nature (scaladoc above) — the
-      // collect is bounded by the same contract the broadcast was
-      val seedArr: Array[Any] = seeds.select(col("node")).distinct()
-        .collect().map(_.get(0))
-      return pageRankKernel(edges.sparkSession, symC.schema("src").dataType,
+      // collect is bounded by the same contract the broadcast was. The
+      // kernel looks seeds up by the edge key type, so seeds of another
+      // type are cast to it first (the loop's join coerces them); a seed
+      // the key type cannot hold becomes null and matches no vertex
+      val keyType = symC.schema("src").dataType
+      val seedArr: Array[Any] = seeds.select(col("node").try_cast(keyType))
+        .distinct().collect().map(_.get(0))
+      return pageRankKernel(edges.sparkSession, keyType,
         small.get, iters, Some(seedArr))
     }
     val deg = symC.groupBy(col("src")).agg(count(lit(1)).as("deg"))

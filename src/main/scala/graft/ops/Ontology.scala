@@ -299,7 +299,7 @@ object Ontology {
     }
     require(processed == nNodes,
       "ancestorClosure: input has a cycle (a node is its own ancestor)")
-    val maxDepth = depth.max.toLong
+    val maxDepth = depth.maxOption.getOrElse(0).toLong // 0 on no edges
     require(maxDepth <= (1L << (maxDoublings - 1)),
       s"ancestorClosure did not converge in $maxDoublings doublings " +
         s"(depth > 2^$maxDoublings)")

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 /** End-to-end: fixtures → pre-process parquet stage → three nested
   * JSON index collections, read back and checked. */
@@ -76,5 +77,26 @@ class PipelineSpec extends AnyFunSuite with WithSpark {
     assert(files.count() == 5)
     assert(files.filter($"file_name" === "f1.cram")
       .select($"donor.gender").as[String].collect().head == "Female")
+  }
+
+  test("two pipeline runs write the same documents per study") {
+    // the concurrent writes must not change any document
+    val works = Seq.fill(2)(Files.createTempDirectory("graft-pipeline-det")
+      .toString)
+    works.foreach(Pipeline.run(spark, "src/test/resources/clinical", _))
+    def docs(index: String, work: String): Map[String, Seq[String]] =
+      new java.io.File(s"$work/indexes/$index").listFiles()
+        .filter(_.getName.startsWith("study_id=")).map { dir =>
+          dir.getName -> dir.listFiles().toSeq
+            .filter(f => f.getName.startsWith("part-") &&
+              f.getName.endsWith(".json"))
+            .flatMap(f => Files.readAllLines(f.toPath).asScala)
+            .sorted
+        }.toMap
+    for (index <- Seq("donors", "studies", "files")) {
+      val Seq(a, b) = works.map(docs(index, _))
+      assert(a.keySet == Set("study_id=GS001", "study_id=GS002"), index)
+      assert(a == b, s"$index documents differ between runs")
+    }
   }
 }

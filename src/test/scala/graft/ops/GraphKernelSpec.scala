@@ -72,15 +72,17 @@ class GraphKernelSpec extends AnyFunSuite {
   }
 
   test("personalizedPageRankInt kernel equals the distributed loop") {
-    for (t <- AllKeys) {
+    // (edge key type, seed type): matching types, plus int edges with
+    // long seeds, which the loop's join coerces
+    for ((t, st) <- AllKeys.map(t => (t, t)) :+ ("int" -> "long")) {
       val e = rekey(randomEdges(3L, 40, 80), t, "a", "b")
       // 9999 not a vertex
-      val seeds = rekey(Seq(1L, 5L, 9999L).toDF("node"), t, "node")
+      val seeds = rekey(Seq(1L, 5L, 9999L).toDF("node"), st, "node")
       assertSame(
         Graph.personalizedPageRankInt(e, seeds, iters = 4),
         Graph.personalizedPageRankInt(e, seeds, iters = 4,
           smallGraphEdges = 0L),
-        s"personalizedPageRankInt($t)")
+        s"personalizedPageRankInt($t edges, $st seeds)")
     }
   }
 
@@ -183,6 +185,16 @@ class GraphKernelSpec extends AnyFunSuite {
         Ontology.ancestorClosure(e),
         Ontology.ancestorClosure(e, smallGraphEdges = 0L),
         s"ancestorClosure($t)")
+    }
+  }
+
+  test("ancestorClosure on an empty long-keyed edge frame is empty at " +
+    "every gate") {
+    val e = Seq.empty[(Long, Long)].toDF("child", "anc")
+    for (gate <- Seq(DriverKernel.MaxEdges, 0L)) {
+      val c = Ontology.ancestorClosure(e, smallGraphEdges = gate)
+      assert(c.columns.toSeq == Seq("child", "anc"), s"gate=$gate")
+      assert(c.collect().isEmpty, s"gate=$gate")
     }
   }
 }
