@@ -1,29 +1,28 @@
 package graft
 
 import graft.core.Session
+import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times every registered query at SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line. Failures are reported explicitly (`null` timing +
   * an `errors` map) — a broken query must never read as a fast success.
   */
 object Bench {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Session.local(cpus.toInt)
-    spark.sparkContext.setLogLevel("WARN")
-    // Warmup: touch every table and exercise codegen/shuffle machinery
-    // once, so JVM/JIT/codegen init lands here instead of inflating
-    // whichever query sorts first.
+  /** The warm-up [[Bench]] and [[Probe]] run before timing anything.
+    * Returns the artifact build time (`build_s`), None if it failed. */
+  def warm(spark: SparkSession, sfDir: String): Option[Double] = {
+    // Touch every table and exercise codegen/shuffle machinery once, so
+    // JVM/JIT/codegen init lands here instead of inflating whichever
+    // query sorts first.
     graft.core.Tables.all.foreach { t =>
       try graft.core.Tables.load(spark, sfDir, t).count()
       catch { case e: Throwable =>
-        System.err.println(s"[bench] warmup load of $t failed: ${e.getMessage}")
+        System.err.println(s"[warm] load of $t failed: ${e.getMessage}")
       }
     }
     try SparkEntry.queries("q_join_dims")(spark, sfDir).count()
     catch { case e: Throwable =>
-      System.err.println(s"[bench] warmup query failed: ${e.getMessage}")
+      System.err.println(s"[warm] query failed: ${e.getMessage}")
     }
     // Pre-build the amortized index-time artifacts (PQ codebooks, the
     // stored IVF/IVFADC indexes, the refresh scenarios' prior
@@ -34,20 +33,24 @@ object Bench {
     // overstated the two PQ faces ~7×). Results are unchanged: the
     // caches are deterministic and keyed by sf dir.
     val b0 = System.nanoTime()
-    val buildSecs =
-      try {
-        graft.queries.SimilarityQueries.warm(spark, sfDir)
-        graft.queries.IndexQueries.warm(spark)
-        graft.queries.TextQueries.warm(spark, sfDir)
-        graft.queries.SourceQueries.warm(spark, sfDir)
-        Some((System.nanoTime() - b0) / 1e9)
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] artifact warmup failed: ${e.getMessage}")
-        None
-      }
-    // local-dev subsetting only (the driver never sets it): regex over
-    // query names to time a few faces without the full 190-query run
-    val nameFilter = sys.env.get("SPARK_GRAFT_BENCH_FILTER").map(_.r)
+    try {
+      graft.queries.SimilarityQueries.warm(spark, sfDir)
+      graft.queries.IndexQueries.warm(spark)
+      graft.queries.TextQueries.warm(spark, sfDir)
+      graft.queries.SourceQueries.warm(spark, sfDir)
+      Some((System.nanoTime() - b0) / 1e9)
+    } catch { case e: Throwable =>
+      System.err.println(s"[warm] artifact build failed: ${e.getMessage}")
+      None
+    }
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val spark = Session.local(cpus.toInt)
+    spark.sparkContext.setLogLevel("WARN")
+    val buildSecs = warm(spark, sfDir)
     // Hash-ordered execution (sort by md5(name)): alphabetical order
     // made round-over-round per-query diffs chase scheduler/cache-
     // neighborhood noise (±50% swings on unchanged faces). Round 11
@@ -77,10 +80,7 @@ object Bench {
       val p = Pass(scala.collection.mutable.LinkedHashMap(),
         scala.collection.mutable.LinkedHashMap(),
         scala.collection.mutable.LinkedHashMap())
-      ordered
-        .filter { case (n, _) =>
-          nameFilter.forall(_.findFirstIn(n).isDefined) }
-        .foreach { case (name, fn) =>
+      ordered.foreach { case (name, fn) =>
         // Nudge the ContextCleaner BEFORE the clock starts: earlier
         // queries' localCheckpoint/persist blocks are reclaimed on GC,
         // and without this a later query pays its predecessors' memory
@@ -127,14 +127,17 @@ object Bench {
     val priorTotal: Option[Double] =
       try {
         val p = java.nio.file.Paths.get("BENCH_LOCAL.json")
-        if (java.nio.file.Files.exists(p) && nameFilter.isEmpty) {
+        if (java.nio.file.Files.exists(p)) {
           val s = java.nio.file.Files.readString(p)
           val m = """"metric":"total","value":([0-9.eE+-]+)""".r
             .findFirstMatchIn(s).map(_.group(1).toDouble)
           val sameSf = s.contains(s""""sf":"$sfDir"""")
           if (sameSf) m else None
         } else None
-      } catch { case _: Throwable => None }
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] prior BENCH_LOCAL.json read failed: ${e.getMessage}")
+        None
+      }
     val drifted = priorTotal.exists(pt =>
       pt > 0 && math.abs(pass1.total / pt - 1.0) > 0.10)
     val pass2: Option[Pass] = if (drifted) Some(runPass()) else None
@@ -158,25 +161,23 @@ object Bench {
     // the artifact alone instead of burning a re-measure. A recheck
     // that throws keeps the face's suite timing and is reported under
     // its name in `errors`.
-    val slowRecheck: Seq[(String, Double)] =
-      if (nameFilter.nonEmpty) Seq.empty
-      else {
-        val fnMap = ordered.toMap
-        timings.toSeq.collect { case (k, Some(v)) => (k, v) }
-          .sortBy(-_._2).take(8).flatMap { case (n, _) =>
-            System.gc()
-            try {
-              val t0 = System.nanoTime()
-              fnMap(n)(spark, sfDir).count()
-              val r = (System.nanoTime() - t0) / 1e9
-              timings(n) = Some(math.min(timings(n).get, r))
-              Some(n -> r)
-            } catch { case e: Throwable =>
-              errors(n) = s"slow recheck failed: ${errText(e)}"
-              None
-            }
+    val slowRecheck: Seq[(String, Double)] = {
+      val fnMap = ordered.toMap
+      timings.toSeq.collect { case (k, Some(v)) => (k, v) }
+        .sortBy(-_._2).take(8).flatMap { case (n, _) =>
+          System.gc()
+          try {
+            val t0 = System.nanoTime()
+            fnMap(n)(spark, sfDir).count()
+            val r = (System.nanoTime() - t0) / 1e9
+            timings(n) = Some(math.min(timings(n).get, r))
+            Some(n -> r)
+          } catch { case e: Throwable =>
+            errors(n) = s"slow recheck failed: ${errText(e)}"
+            None
           }
-      }
+        }
+    }
     val recheckJson = slowRecheck
       .map { case (k, v) => s"\"$k\":$v" }.mkString("{", ",", "}")
     val rerunJson = pass2 match {
@@ -207,12 +208,10 @@ object Bench {
     // any tail capture whole: total, build, failure count, and the
     // slowest queries (the part of the distribution a reviewer needs
     // first).
-    if (nameFilter.isEmpty) { // a subset run must not shadow the record
-      try java.nio.file.Files.writeString(
-        java.nio.file.Paths.get("BENCH_LOCAL.json"), fullLine + "\n")
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] BENCH_LOCAL.json write failed: ${e.getMessage}")
-      }
+    try java.nio.file.Files.writeString(
+      java.nio.file.Paths.get("BENCH_LOCAL.json"), fullLine + "\n")
+    catch { case e: Throwable =>
+      System.err.println(s"[bench] BENCH_LOCAL.json write failed: ${e.getMessage}")
     }
     val slowest = timings.toSeq
       .collect { case (k, Some(v)) => (k, v) }

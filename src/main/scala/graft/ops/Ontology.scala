@@ -110,6 +110,8 @@ object Ontology {
   /** Merge per-(group, term) payload-value lists:
     * `collect_list(array(c))` → `array_distinct(sort_array(flatten(...)))`
     * (reference: ProcessETLUtils.scala:299-318 age_at_event merge).
+    * A term id that carries several names (every ICD chapter ancestor
+    * has id `""`) keeps the least one, whatever the row order.
     */
   def mergeValueLists(
       expanded: DataFrame,
@@ -119,7 +121,7 @@ object Ontology {
     expanded
       .groupBy((groupKeys :+ "term_id").map(col): _*)
       .agg(
-        first(col("term_name")).as("term_name"),
+        min(col("term_name")).as("term_name"),
         max(col("is_tagged")).as("is_tagged"),
         max(col("is_leaf")).as("is_leaf"),
         array_distinct(sort_array(flatten(collect_list(array(col(valueCol))))))

@@ -1355,12 +1355,9 @@ object Similarity {
       .select(col("src_id"), col("tgt_id"), col("c6"), col("margin"))
   }
 
-  // ---- dev-probe hooks (graft.IvfProbe): the internal IVF phases,
-  //      exposed unchanged so phase timings can be taken in isolation
-  private[graft] def probeCentroids(
-      corpus: DataFrame, id: String, vec: String,
-      numCentroids: Int, refineIters: Int): Array[(Int, Array[Double])] =
-    ivfCentroids(corpus, id, vec, numCentroids, refineIters)
+  // ---- literal-tower references (IvfAssignSpec): the IVF assignment
+  //      expressions as plain literal towers, to compare the codegen'd
+  //      reference-object path against
   private[graft] def probeAssignExpr(
       corpus: DataFrame, id: String, vec: String,
       cs: Array[(Int, Array[Double])]): DataFrame =
@@ -1368,19 +1365,10 @@ object Similarity {
         col(vec).cast("array<double>").as("__cv"))
       .withColumn("__cid",
         rankedCentroids(col("__cv"), cs).getItem(0).getField("cid"))
-  private[graft] def probeCosine(a: Column, b: Column): Column = cosine(a, b)
   private[graft] def probeRankedExprArray(
       queries: DataFrame, id: String, vec: String,
       cs: Array[(Int, Array[Double])]): DataFrame =
     queries.select(col(id),
       transform(rankedCentroids(col(vec).cast("array<double>"), cs),
         s => s.getField("cid")).as("order_lit"))
-  private[graft] def probeQueryExpr(
-      queries: DataFrame, id: String, vec: String,
-      cs: Array[(Int, Array[Double])], nProbe: Int): DataFrame =
-    queries.select(col(id).as("query_id"),
-        col(vec).cast("array<double>").as("__qv"))
-      .withColumn("__cid", explode(slice(
-        transform(rankedCentroids(col("__qv"), cs),
-          s => s.getField("cid")), 1, nProbe)))
 }

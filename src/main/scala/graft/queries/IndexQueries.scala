@@ -538,10 +538,6 @@ object IndexQueries {
     * [[Indexes.writeStudyIndexStore]] so `q_index_refresh_stored`
     * times the partition-pruned refresh + read view, not the
     * scaffold. */
-  /** Dev-probe hook (BreakdownProbe): the cached stored-prior dir. */
-  private[graft] def probeStalePriorStore(
-      s: org.apache.spark.sql.SparkSession): String = stalePriorStore(s)
-
   private def stalePriorStore(
       s: org.apache.spark.sql.SparkSession): String =
     priorCache.computeIfAbsent("stale_prior_store", _ => {

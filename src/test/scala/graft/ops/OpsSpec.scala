@@ -164,6 +164,17 @@ class OntologySpec extends AnyFunSuite with WithSpark {
       .filter(col("term_id") === "HP:3")
       .select("ages").as[Seq[String]].collect().head
     assert(got == Seq("07", "12"))
+    // one term id under two names (as every ICD chapter has id ""),
+    // the larger name first in the one partition: the least name wins
+    val twoNames = Seq(
+      ("S1", "D1", "", "Chapter 5", false, false, "30"),
+      ("S1", "D1", "", "Chapter 4", false, false, "20")).toDF(
+      "study_id", "donor_id", "term_id", "term_name", "is_tagged",
+      "is_leaf", "age_at_event").coalesce(1)
+    val named = Ontology.mergeValueLists(
+        twoNames, Seq("study_id", "donor_id"), "age_at_event", "ages")
+      .select("term_name", "ages").as[(String, Seq[String])].collect()
+    assert(named.toSeq == Seq(("Chapter 4", Seq("20", "30"))))
   }
 
   test("expandAndNest produces one row per group with nested terms") {
