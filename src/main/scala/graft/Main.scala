@@ -1,7 +1,7 @@
 package graft
 
 import graft.core.Session
-import graft.etl.{JsonDictionary, Pipeline, StaticDictionary}
+import graft.etl.Pipeline
 
 /** CLI entry point — the reference's `pre-process` / `process`
   * commands (reference: commands/PreProcess.scala, commands/Process
@@ -12,8 +12,9 @@ import graft.etl.{JsonDictionary, Pipeline, StaticDictionary}
   *   graft.Main process     -i <inputDir> -o <workDir>   // both stages
   * }}}
   *
-  * When `<inputDir>/dictionary.json` exists it backs the whitelist
-  * dictionary; otherwise the built-in fixture schemas apply.
+  * `<inputDir>/dictionary.json` is required: it backs the whitelist
+  * dictionary ([[graft.etl.JsonDictionary]]), and a run without it
+  * fails naming that file.
   */
 object Main {
   def main(args: Array[String]): Unit = {
@@ -29,20 +30,13 @@ object Main {
     val spark = Session.local(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
 
-    val dict =
-      if (new java.io.File(s"$in/dictionary.json").exists())
-        JsonDictionary(spark, s"$in/dictionary.json")
-      else StaticDictionary(Pipeline.FixtureSchemas)
-
     cmd match {
       case "pre-process" =>
-        Pipeline.preProcessStage(spark, in, out, dictionary = dict)
+        Pipeline.preProcessStage(spark, in, out,
+          dictionary = Pipeline.dictionary(spark, in))
         println(s"pre-process complete -> $out")
       case "process" | _ =>
-        val entities =
-          Pipeline.preProcessStage(spark, in, s"$out/stage1",
-            dictionary = dict)
-        Pipeline.processStage(spark, in, entities, s"$out/indexes")
+        Pipeline.run(spark, in, out)
         println(s"pipeline complete -> $out/indexes/{donors,studies,files}")
     }
     spark.stop()

@@ -28,6 +28,15 @@ import org.apache.spark.sql.functions._
   * Run: `sbt "runMain graft.ScaleRehearsal [sfDir] [faceRegex]"`.
   */
 object ScaleRehearsal {
+  /** The clinical inputs ×`copies`: every entity table unioned with
+    * `copies - 1` replicas whose study ids carry a `_S<k>` salt. */
+  private def replicate(in: Indexes.ClinicalInputs,
+      copies: Int): Indexes.ClinicalInputs =
+    in.mapEntities(df => (0 until copies).map { k =>
+      if (k == 0) df
+      else df.withColumn("study_id", concat(col("study_id"), lit(s"_S$k")))
+    }.reduce(_.unionByName(_)))
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val sel = args.lift(1).map(_.r)
@@ -116,18 +125,6 @@ object ScaleRehearsal {
     if (on("index_refresh")) {
       val fixtures = "/root/repo/src/test/resources/clinical"
       val meta = Seq("dictionary_version" -> "9.9", "study_version" -> "v42")
-      def replicate(in: Indexes.ClinicalInputs, copies: Int): Indexes.ClinicalInputs = {
-        def rep(df: DataFrame): DataFrame = (0 until copies).map { k =>
-          if (k == 0) df
-          else df.withColumn("study_id", concat(col("study_id"), lit(s"_S$k")))
-        }.reduce(_.unionByName(_))
-        in.copy(donor = rep(in.donor), study = rep(in.study),
-          phenotype = rep(in.phenotype), file = rep(in.file),
-          biospecimen = rep(in.biospecimen), samples = rep(in.samples),
-          diagnosis = rep(in.diagnosis), treatment = rep(in.treatment),
-          followUp = rep(in.followUp), exposure = rep(in.exposure),
-          family = rep(in.family), familyHistory = rep(in.familyHistory))
-      }
       def refreshSecs(copies: Int, label: String): Double = {
         val in = replicate(
           Indexes.ClinicalInputs.fromDir(spark, fixtures), copies)
@@ -945,18 +942,6 @@ object ScaleRehearsal {
     if (on("inc100_index")) {
       val fixtures = "/root/repo/src/test/resources/clinical"
       val meta = Seq("dictionary_version" -> "9.9", "study_version" -> "v42")
-      def replicate(in: Indexes.ClinicalInputs, copies: Int): Indexes.ClinicalInputs = {
-        def rep(df: DataFrame): DataFrame = (0 until copies).map { k =>
-          if (k == 0) df
-          else df.withColumn("study_id", concat(col("study_id"), lit(s"_S$k")))
-        }.reduce(_.unionByName(_))
-        in.copy(donor = rep(in.donor), study = rep(in.study),
-          phenotype = rep(in.phenotype), file = rep(in.file),
-          biospecimen = rep(in.biospecimen), samples = rep(in.samples),
-          diagnosis = rep(in.diagnosis), treatment = rep(in.treatment),
-          followUp = rep(in.followUp), exposure = rep(in.exposure),
-          family = rep(in.family), familyHistory = rep(in.familyHistory))
-      }
       // the contract under test is the STORED snapshot's refresh
       // (refreshStudyIndexStore): dim-sized universe side table, one
       // changed-study rebuild, dynamic overwrite of ONLY the changed

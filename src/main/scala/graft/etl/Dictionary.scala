@@ -15,12 +15,6 @@ trait Dictionary {
   def schemas(version: String): Map[String, Seq[String]]
 }
 
-/** Static in-code dictionary (the default for tests/pipelines). */
-final case class StaticDictionary(byEntity: Map[String, Seq[String]])
-    extends Dictionary {
-  override def schemas(version: String): Map[String, Seq[String]] = byEntity
-}
-
 /** JSON-document dictionary:
   * `[{version, schemas: [{name, columns: [...]}]}]` (multiline JSON,
   * like the reference's Lectern payload reduced to what the engine

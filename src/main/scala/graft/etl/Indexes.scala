@@ -29,14 +29,27 @@ object Indexes {
   /** The full 12-entity clinical model plus the 4 ontology term tables
     * (reference: PreProcessETLConfig.scala entity list; ProcessETL
     * .scala:40-60 extract). Bundling the frames keeps the index
-    * builders' signatures stable as branches are added. */
+    * builders' signatures stable as branches are added. The fields
+    * are in [[ClinicalInputs.Entities]] then [[ClinicalInputs.Terms]]
+    * order. */
   final case class ClinicalInputs(
       donor: DataFrame, study: DataFrame, phenotype: DataFrame,
       file: DataFrame, biospecimen: DataFrame, samples: DataFrame,
       diagnosis: DataFrame, treatment: DataFrame, followUp: DataFrame,
       exposure: DataFrame, family: DataFrame, familyHistory: DataFrame,
       hpoTerms: DataFrame, mondoTerms: DataFrame, icdTerms: DataFrame,
-      duoTerms: DataFrame)
+      duoTerms: DataFrame) {
+
+    /** The frame of one entity or term table. */
+    def frame(t: ClinicalInputs.Table): DataFrame =
+      productElement(productElementNames.indexOf(t.field))
+        .asInstanceOf[DataFrame]
+
+    /** `f` applied to the 12 entity frames; the term tables pass
+      * through. */
+    def mapEntities(f: DataFrame => DataFrame): ClinicalInputs =
+      ClinicalInputs.build(e => f(frame(e)), frame)
+  }
 
   /** Explicit ontology term-table schema (field order matches what
     * Spark's JSON inference produces, so plans are identical — minus
@@ -49,28 +62,59 @@ object Indexes {
 
   object ClinicalInputs {
     import graft.sources.Sources
+    import org.apache.spark.sql.SparkSession
+
+    /** One table of the clinical model: its [[ClinicalInputs]] field
+      * (also its directory in a [[writeClinicalCatalog]] layout) and
+      * its file in an input directory. */
+    final case class Table(field: String, file: String) {
+      /** The sanitized file name: the entity's stage-1 directory, its
+        * dictionary schema name and its [[PreProcess.ClinicalEntities]]
+        * key. */
+      def stage: String = GraftFunctions.sanitize(file)
+    }
+
+    /** The 12 entity TSVs, in field order. */
+    val Entities: Seq[Table] = Seq(
+      Table("donor", "donor.tsv"), Table("study", "study.tsv"),
+      Table("phenotype", "phenotype.tsv"), Table("file", "file.tsv"),
+      Table("biospecimen", "biospecimen.tsv"),
+      Table("samples", "sample_registration.tsv"),
+      Table("diagnosis", "diagnosis.tsv"),
+      Table("treatment", "treatment.tsv"),
+      Table("followUp", "follow_up.tsv"), Table("exposure", "exposure.tsv"),
+      Table("family", "family.tsv"),
+      Table("familyHistory", "family_history.tsv"))
+
+    /** The 4 ontology term files, in field order after the entities. */
+    val Terms: Seq[Table] = Seq(
+      Table("hpoTerms", "terms.jsonl.gz"),
+      Table("mondoTerms", "mondo_terms.jsonl.gz"),
+      Table("icdTerms", "icd_terms.jsonl.gz"),
+      Table("duoTerms", "duo_terms.jsonl.gz"))
+
+    /** One frame per entity and per term table. */
+    private[etl] def build(entity: Table => DataFrame,
+        term: Table => DataFrame): ClinicalInputs = {
+      val f = (Entities.map(entity) ++ Terms.map(term)).toIndexedSeq
+      ClinicalInputs(f(0), f(1), f(2), f(3), f(4), f(5), f(6), f(7), f(8),
+        f(9), f(10), f(11), f(12), f(13), f(14), f(15))
+    }
+
+    private def readTerm(spark: SparkSession, dir: String)(
+        t: Table): DataFrame =
+      Sources.jsonLines(spark, s"$dir/${t.file}", TermSchema)
+
     /** Read every entity + term table from one fixture directory. */
-    def fromDir(spark: org.apache.spark.sql.SparkSession,
-        dir: String): ClinicalInputs = ClinicalInputs(
-      donor = Sources.tsv(spark, s"$dir/donor.tsv"),
-      study = Sources.tsv(spark, s"$dir/study.tsv"),
-      phenotype = Sources.tsv(spark, s"$dir/phenotype.tsv"),
-      file = Sources.tsv(spark, s"$dir/file.tsv"),
-      biospecimen = Sources.tsv(spark, s"$dir/biospecimen.tsv"),
-      samples = Sources.tsv(spark, s"$dir/sample_registration.tsv"),
-      diagnosis = Sources.tsv(spark, s"$dir/diagnosis.tsv"),
-      treatment = Sources.tsv(spark, s"$dir/treatment.tsv"),
-      followUp = Sources.tsv(spark, s"$dir/follow_up.tsv"),
-      exposure = Sources.tsv(spark, s"$dir/exposure.tsv"),
-      family = Sources.tsv(spark, s"$dir/family.tsv"),
-      familyHistory = Sources.tsv(spark, s"$dir/family_history.tsv"),
-      hpoTerms = Sources.jsonLines(spark, s"$dir/terms.jsonl.gz", TermSchema),
-      mondoTerms =
-        Sources.jsonLines(spark, s"$dir/mondo_terms.jsonl.gz", TermSchema),
-      icdTerms =
-        Sources.jsonLines(spark, s"$dir/icd_terms.jsonl.gz", TermSchema),
-      duoTerms =
-        Sources.jsonLines(spark, s"$dir/duo_terms.jsonl.gz", TermSchema))
+    def fromDir(spark: SparkSession, dir: String): ClinicalInputs =
+      build(e => Sources.tsv(spark, s"$dir/${e.file}"), readTerm(spark, dir))
+
+    /** Pre-processed entities keyed by [[Table.stage]] (as
+      * [[Pipeline.preProcessStage]] returns them) plus the term files
+      * of `inputDir`. */
+    def fromStage(spark: SparkSession, inputDir: String,
+        entities: Map[String, DataFrame]): ClinicalInputs =
+      build(e => entities(e.stage), readTerm(spark, inputDir))
   }
 
   /** MONDO root-membership main-category rule (reference
@@ -418,16 +462,8 @@ object Indexes {
     * by study_id on disk these filters become partition pruning, so a
     * changed-studies rebuild reads only the changed studies' bytes.
     */
-  def filterStudies(in: ClinicalInputs, studies: Seq[String]): ClinicalInputs = {
-    def f(df: DataFrame): DataFrame =
-      df.filter(col("study_id").isin(studies: _*))
-    in.copy(donor = f(in.donor), study = f(in.study),
-      phenotype = f(in.phenotype), file = f(in.file),
-      biospecimen = f(in.biospecimen), samples = f(in.samples),
-      diagnosis = f(in.diagnosis), treatment = f(in.treatment),
-      followUp = f(in.followUp), exposure = f(in.exposure),
-      family = f(in.family), familyHistory = f(in.familyHistory))
-  }
+  def filterStudies(in: ClinicalInputs, studies: Seq[String]): ClinicalInputs =
+    in.mapEntities(_.filter(col("study_id").isin(studies: _*)))
 
   /** Incremental refresh for the study-keyed products WITHOUT a
     * cross-study dependency (donor and file documents: every branch —
@@ -707,32 +743,19 @@ object Indexes {
     * FILE LISTING — the plan is always 12 pruned scans + 4 term scans,
     * independent of corpus size — and the catalog-based refresh
     * overloads below make the unpruned-plan mistake inexpressible:
-    * there is no frame for the caller to mis-build. */
-  private val EntityNames = Seq("donor", "study", "phenotype", "file",
-    "biospecimen", "samples", "diagnosis", "treatment", "followUp",
-    "exposure", "family", "familyHistory")
-  private val TermNames = Seq("hpoTerms", "mondoTerms", "icdTerms",
-    "duoTerms")
-  private def entityFrames(in: ClinicalInputs): Seq[DataFrame] =
-    Seq(in.donor, in.study, in.phenotype, in.file, in.biospecimen,
-      in.samples, in.diagnosis, in.treatment, in.followUp, in.exposure,
-      in.family, in.familyHistory)
-  private def termFrames(in: ClinicalInputs): Seq[DataFrame] =
-    Seq(in.hpoTerms, in.mondoTerms, in.icdTerms, in.duoTerms)
-
-  /** Writes the catalog's 16 tables as concurrent jobs
+    * there is no frame for the caller to mis-build.
+    *
+    * The 16 tables are written as concurrent jobs
     * ([[graft.core.ConcurrentActions]]); no table depends on another. */
   def writeClinicalCatalog(in: ClinicalInputs, dir: String): Unit = {
-    val entityWrites = EntityNames.zip(entityFrames(in)).map {
-      case (name, df) => () =>
-        df.withColumn("__study_pt", col("study_id"))
-          .repartition(col("__study_pt"))
-          .write.mode("overwrite").partitionBy("__study_pt")
-          .parquet(s"$dir/$name")
+    val entityWrites = ClinicalInputs.Entities.map { e => () =>
+      in.frame(e).withColumn("__study_pt", col("study_id"))
+        .repartition(col("__study_pt"))
+        .write.mode("overwrite").partitionBy("__study_pt")
+        .parquet(s"$dir/${e.field}")
     }
-    val termWrites = TermNames.zip(termFrames(in)).map {
-      case (name, df) => () =>
-        df.write.mode("overwrite").parquet(s"$dir/$name")
+    val termWrites = ClinicalInputs.Terms.map { t => () =>
+      in.frame(t).write.mode("overwrite").parquet(s"$dir/${t.field}")
     }
     ConcurrentActions.run(in.donor.sparkSession, entityWrites ++ termWrites)
   }
@@ -774,21 +797,11 @@ object Indexes {
     * read's file listing to those studies' directories. */
   def readClinicalCatalog(
       spark: org.apache.spark.sql.SparkSession, dir: String,
-      studies: Seq[String] = Seq.empty): ClinicalInputs = {
-    def entity(name: String): DataFrame =
-      prunedPartitionRead(spark, s"$dir/$name", studies)
-        .drop("__study_pt")
-    def term(name: String): DataFrame = spark.read.parquet(s"$dir/$name")
-    ClinicalInputs(
-      donor = entity("donor"), study = entity("study"),
-      phenotype = entity("phenotype"), file = entity("file"),
-      biospecimen = entity("biospecimen"), samples = entity("samples"),
-      diagnosis = entity("diagnosis"), treatment = entity("treatment"),
-      followUp = entity("followUp"), exposure = entity("exposure"),
-      family = entity("family"), familyHistory = entity("familyHistory"),
-      hpoTerms = term("hpoTerms"), mondoTerms = term("mondoTerms"),
-      icdTerms = term("icdTerms"), duoTerms = term("duoTerms"))
-  }
+      studies: Seq[String] = Seq.empty): ClinicalInputs =
+    ClinicalInputs.build(
+      e => prunedPartitionRead(spark, s"$dir/${e.field}", studies)
+        .drop("__study_pt"),
+      t => spark.read.parquet(s"$dir/${t.field}"))
 
   /** [[refreshStudyIndexStore]] from a [[writeClinicalCatalog]] layout:
     * the changed studies' input slice is read PARTITION-PRUNED inside —

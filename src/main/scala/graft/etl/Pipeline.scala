@@ -20,52 +20,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Pipeline {
 
-  /** Entity name → dictionary whitelist for the fixture schema; the
-    * reference resolves this from its Lectern dictionary service
-    * (DictionaryClient.scala:60-82) — here it's explicit data. */
-  val FixtureSchemas: Map[String, Seq[String]] = Map(
-    "donor" -> Seq("study_id", "submitter_donor_id", "dob", "gender",
-      "ethnicity", "vital_status"),
-    "study" -> Seq("study_id", "name", "domain", "access_limitations",
-      "access_requirements"),
-    "phenotype" -> Seq("study_id", "submitter_donor_id",
-      "submitter_phenotype_id", "phenotype_HPO_code", "phenotype_HPO_term",
-      "age_at_phenotype", "phenotype_observed"),
-    "biospecimen" -> Seq("study_id", "submitter_donor_id",
-      "submitter_biospecimen_id", "biospecimen_tissue_source",
-      "biospecimen_type", "is_cancer"),
-    "sampleregistration" -> Seq("study_id", "submitter_donor_id",
-      "submitter_biospecimen_id", "submitter_sample_id", "sample_type"),
-    "file" -> Seq("study_id", "submitter_donor_id",
-      "submitter_biospecimen_id", "file_name", "data_category",
-      "data_type", "experimental_strategy", "file_format", "data_access"),
-    "diagnosis" -> Seq("study_id", "submitter_donor_id",
-      "submitter_diagnosis_id", "diagnosis_mondo_code",
-      "diagnosis_ICD_code", "age_at_diagnosis", "is_cancer"),
-    "treatment" -> Seq("study_id", "submitter_donor_id",
-      "submitter_treatment_id", "submitter_diagnosis_id",
-      "treatment_type", "treatment_intent"),
-    "followup" -> Seq("study_id", "submitter_donor_id",
-      "submitter_diagnosis_id", "submitter_follow_up_id",
-      "days_to_follow_up", "disease_status"),
-    "exposure" -> Seq("study_id", "submitter_donor_id",
-      "smoking_status", "alcohol_status"),
-    "family" -> Seq("study_id", "submitter_family_id",
-      "submitter_donor_id", "family_type", "is_a_proband",
-      "relationship_to_proband"),
-    "familyhistory" -> Seq("study_id", "submitter_donor_id",
-      "submitter_family_condition_id", "family_condition_name",
-      "family_condition_age", "family_condition_relationship"))
-
-  /** File-name stem per entity in the fixture directory. */
-  private val EntityFiles: Map[String, String] = Map(
-    "donor" -> "donor.tsv", "study" -> "study.tsv",
-    "phenotype" -> "phenotype.tsv", "biospecimen" -> "biospecimen.tsv",
-    "sampleregistration" -> "sample_registration.tsv",
-    "file" -> "file.tsv",
-    "diagnosis" -> "diagnosis.tsv", "treatment" -> "treatment.tsv",
-    "followup" -> "follow_up.tsv", "exposure" -> "exposure.tsv",
-    "family" -> "family.tsv", "familyhistory" -> "family_history.tsv")
+  /** The whitelist dictionary of an input directory:
+    * `<inputDir>/dictionary.json` ([[JsonDictionary]]). */
+  def dictionary(spark: SparkSession, inputDir: String): Dictionary =
+    JsonDictionary(spark, s"$inputDir/dictionary.json")
 
   /** Stage 1: TSV → pre-processed parquet. The dictionary resolves
     * per-entity whitelists at the metadata's dictionaryVersion
@@ -73,14 +31,13 @@ object Pipeline {
     * independent and run as concurrent jobs
     * ([[graft.core.ConcurrentActions]]).
     *
-    * Also returns each entity's pre-processed frame. The frames are
-    * lazy: a caller that acts on them (as [[processStage]] does)
-    * re-reads the TSVs and re-mints the ids; it does not read the
-    * parquet this stage wrote. */
+    * Returns each entity's frame read back from the parquet this stage
+    * wrote, keyed by its stage-1 directory name
+    * ([[Indexes.ClinicalInputs.Table.stage]]). */
   def preProcessStage(
       spark: SparkSession, inputDir: String, stageDir: String,
-      resolver: PreProcess.IdResolver = PreProcess.HashDerivedIds,
-      dictionary: Dictionary = StaticDictionary(FixtureSchemas))
+      dictionary: Dictionary,
+      resolver: PreProcess.IdResolver = PreProcess.HashDerivedIds)
       : Map[String, DataFrame] = {
     val meta = Sources.multilineJson(spark, s"$inputDir/metadata.json")
       .select("dictionaryVersion", "studyVersionId", "studyVersionDate")
@@ -90,14 +47,15 @@ object Pipeline {
       "study_version" -> meta.getString(1),
       "study_version_creation_date" -> meta.getString(2))
     val schemas = dictionary.schemas(meta.getString(0))
-    ConcurrentActions.run(spark, EntityFiles.toSeq.map {
-      case (entity, fileName) => () =>
-        val raw = Sources.tsv(spark, s"$inputDir/$fileName")
+    ConcurrentActions.run(spark, Indexes.ClinicalInputs.Entities.map {
+      e => () =>
+        val raw = Sources.tsv(spark, s"$inputDir/${e.file}")
         val processed = PreProcess.preProcessEntity(
-          fileName, raw, schemas(entity), resolver,
-          studyMeta = stamps)
-        Sinks.parquet(processed, s"$stageDir/$entity")
-        entity -> processed
+          e.file, raw, schemas(e.stage), resolver, studyMeta = stamps)
+        val dir = s"$stageDir/${e.stage}"
+        Sinks.parquet(processed, dir)
+        // the written schema skips a footer-inference job per entity
+        e.stage -> spark.read.schema(processed.schema).parquet(dir)
     }).toMap
   }
 
@@ -106,22 +64,7 @@ object Pipeline {
   def processStage(
       spark: SparkSession, inputDir: String,
       entities: Map[String, DataFrame], outDir: String): Unit = {
-    val in = Indexes.ClinicalInputs(
-      donor = entities("donor"), study = entities("study"),
-      phenotype = entities("phenotype"), file = entities("file"),
-      biospecimen = entities("biospecimen"),
-      samples = entities("sampleregistration"),
-      diagnosis = entities("diagnosis"), treatment = entities("treatment"),
-      followUp = entities("followup"), exposure = entities("exposure"),
-      family = entities("family"), familyHistory = entities("familyhistory"),
-      hpoTerms = Sources.jsonLines(
-        spark, s"$inputDir/terms.jsonl.gz", Indexes.TermSchema),
-      mondoTerms = Sources.jsonLines(
-        spark, s"$inputDir/mondo_terms.jsonl.gz", Indexes.TermSchema),
-      icdTerms = Sources.jsonLines(
-        spark, s"$inputDir/icd_terms.jsonl.gz", Indexes.TermSchema),
-      duoTerms = Sources.jsonLines(
-        spark, s"$inputDir/duo_terms.jsonl.gz", Indexes.TermSchema))
+    val in = Indexes.ClinicalInputs.fromStage(spark, inputDir, entities)
     // shared sub-frames computed once, persisted across the three
     // writes, released after (the reference recomputes them per index);
     // the three writes run as concurrent jobs
@@ -135,9 +78,11 @@ object Pipeline {
     } finally release()
   }
 
-  /** Both stages, fixture-dir in → JSON indexes out. */
+  /** Both stages, fixture-dir in → JSON indexes out; the whitelist is
+    * `<inputDir>/dictionary.json`. */
   def run(spark: SparkSession, inputDir: String, workDir: String): Unit = {
-    val entities = preProcessStage(spark, inputDir, s"$workDir/stage1")
+    val entities = preProcessStage(spark, inputDir, s"$workDir/stage1",
+      dictionary(spark, inputDir))
     processStage(spark, inputDir, entities, s"$workDir/indexes")
   }
 }

@@ -26,8 +26,8 @@ class EmptyInputSpec extends AnyFunSuite with WithSpark {
   private lazy val dir: Path = {
     val d = Files.createTempDirectory("graft_empty_fixture")
     for (f <- Seq("donor.tsv", "study.tsv", "metadata.json",
-        "terms.jsonl.gz", "mondo_terms.jsonl.gz", "icd_terms.jsonl.gz",
-        "duo_terms.jsonl.gz"))
+        "dictionary.json", "terms.jsonl.gz", "mondo_terms.jsonl.gz",
+        "icd_terms.jsonl.gz", "duo_terms.jsonl.gz"))
       Files.copy(src.resolve(f), d.resolve(f),
         StandardCopyOption.REPLACE_EXISTING)
     for (f <- emptied) {

@@ -421,13 +421,7 @@ class IndexesSpec extends AnyFunSuite with WithSpark {
     val ugly = "GS 0:0=1%"
     def esc(df: org.apache.spark.sql.DataFrame) = df.withColumn(
       "study_id", regexp_replace(col("study_id"), "GS001", ugly))
-    val in2 = inputs.copy(donor = esc(inputs.donor),
-      study = esc(inputs.study), phenotype = esc(inputs.phenotype),
-      file = esc(inputs.file), biospecimen = esc(inputs.biospecimen),
-      samples = esc(inputs.samples), diagnosis = esc(inputs.diagnosis),
-      treatment = esc(inputs.treatment), followUp = esc(inputs.followUp),
-      exposure = esc(inputs.exposure), family = esc(inputs.family),
-      familyHistory = esc(inputs.familyHistory))
+    val in2 = inputs.mapEntities(esc)
     val dir = graft.core.Scratch.dir("clinical_catalog_escaped")
     Indexes.writeClinicalCatalog(in2, dir)
     val want = inputs.donor.filter(col("study_id") === "GS001").count()
@@ -450,11 +444,11 @@ class IndexesSpec extends AnyFunSuite with WithSpark {
       .as[String].collect().sorted.toSeq
     val dir = graft.core.Scratch.dir("clinical_catalog")
     Indexes.writeClinicalCatalog(inputs, dir)
-    // round-trip: entity and term tables read back row-identical
+    // round-trip: all 12 entity and 4 term tables read back
+    // row-identical, each into its own field
     val back = Indexes.readClinicalCatalog(spark, dir)
-    assert(canon(back.donor) == canon(inputs.donor))
-    assert(canon(back.file) == canon(inputs.file))
-    assert(canon(back.hpoTerms) == canon(inputs.hpoTerms))
+    for (t <- Indexes.ClinicalInputs.Entities ++ Indexes.ClinicalInputs.Terms)
+      assert(canon(back.frame(t)) == canon(inputs.frame(t)), t.field)
     // STRUCTURAL pruning: the changed-study read lists ONLY the
     // requested studies' directories (direct-path reads — the plan
     // never touches, let alone filters, other partitions)

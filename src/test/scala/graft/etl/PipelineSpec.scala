@@ -4,7 +4,7 @@ import graft.WithSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 /** End-to-end: fixtures → pre-process parquet stage → three nested
@@ -77,6 +77,40 @@ class PipelineSpec extends AnyFunSuite with WithSpark {
     assert(files.count() == 5)
     assert(files.filter($"file_name" === "f1.cram")
       .select($"donor.gender").as[String].collect().head == "Female")
+  }
+
+  test("stage 2 reads the parquet stage 1 wrote, not the TSVs") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.datasources.csv.CSVFileFormat
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    val dir = "src/test/resources/clinical"
+    val stage = Files.createTempDirectory("graft-stage1").toString
+    val entities = Pipeline.preProcessStage(spark, dir, stage,
+      dictionary = JsonDictionary(spark, s"$dir/dictionary.json"))
+    assert(entities.size == 12)
+    for ((name, df) <- entities) {
+      val formats = df.queryExecution.sparkPlan.collect {
+        case scan: FileSourceScanExec => scan.relation.fileFormat
+      }
+      assert(formats.nonEmpty, name)
+      assert(!formats.exists(_.isInstanceOf[CSVFileFormat]),
+        s"$name re-reads its TSV")
+      assert(formats.forall(_.isInstanceOf[ParquetFileFormat]), name)
+    }
+    assert(entities("donor").count() == 5)
+  }
+
+  test("a run without <inputDir>/dictionary.json fails naming that file") {
+    val src = Paths.get("src/test/resources/clinical")
+    val dir = Files.createTempDirectory("graft-no-dictionary")
+    Files.list(src).iterator().asScala
+      .filter(_.getFileName.toString != "dictionary.json")
+      .foreach(f => Files.copy(f, dir.resolve(f.getFileName)))
+    val work = Files.createTempDirectory("graft-no-dictionary-out")
+    val e = intercept[Exception] {
+      Pipeline.run(spark, dir.toString, work.toString)
+    }
+    assert(e.getMessage.contains(s"$dir/dictionary.json"), e.getMessage)
   }
 
   test("two pipeline runs write the same documents per study") {
