@@ -23,9 +23,9 @@ import org.apache.spark.sql.SparkSession
   *    later ones attached as suppressed.
   *
   * The actions must not depend on each other. Frames they share are
-  * built on the calling thread before the call (see
-  * [[LazyCheckpoint.lazily]], which flips a session conf while it
-  * plans).
+  * built on the calling thread before the call (see the lattice
+  * builders in [[graft.ops.Summary]], whose lazy pin flips a session
+  * conf while it plans).
   */
 object ConcurrentActions {
   def run[A](spark: SparkSession, actions: Seq[() => A]): Seq[A] =

@@ -18,6 +18,9 @@ object Tables {
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 
+  /** Scan bytes per partition of a [[spread]] read. */
+  private val SpreadPartitionBytes = 32768L
+
   /** Input-skew relief (optimization guide §2.5: "one huge unsplittable
     * file ... repartition immediately after the read"): a parquet file
     * with a single row group plans as a ONE-task scan no matter how
@@ -43,14 +46,13 @@ object Tables {
     * regression tail from tiny inputs spread across 32 partitions —
     * every downstream stage of the dedup/minhash chains then
     * scheduled a full fan of near-empty tasks): the width is one
-    * partition per `spark.graft.spread.targetPartitionBytes` of scan
-    * bytes (default 32 KB — documents/embeddings pay heavy per-byte
-    * compute: shingle regexes, 64-hash MinHash, 64-dim float kernels;
-    * ~150-300 rows of zstd parquet per core-task keeps 32 cores busy
+    * partition per [[SpreadPartitionBytes]] (32 KB) of scan bytes
+    * (documents/embeddings pay heavy per-byte compute: shingle
+    * regexes, 64-hash MinHash, 64-dim float kernels; ~150-300 rows of zstd parquet per core-task keeps 32 cores busy
     * without scheduling empty tasks), floored at 2 and capped at the
     * session's shuffle parallelism. The constant only shapes the
     * DEGENERATE regime (a deficient single-row-group scan, which a
-    * well-laid-out 100 TB table never hits) and is conf-overridable.
+    * well-laid-out 100 TB table never hits).
     */
   def spread(df: DataFrame): DataFrame = {
     val sess = df.sparkSession
@@ -58,8 +60,7 @@ object Tables {
     val scanParts = df.rdd.getNumPartitions
     if (scanParts * 2 > n) return df
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val target = BigInt(sess.conf
-      .get("spark.graft.spread.targetPartitionBytes", "32768").toLong)
+    val target = BigInt(SpreadPartitionBytes)
     val w = ((bytes + target - 1) / target)
       .min(BigInt(n)).max(BigInt(2)).toInt
     if (w <= scanParts) df else df.repartition(w)

@@ -65,26 +65,45 @@ object Indexes {
     import org.apache.spark.sql.SparkSession
 
     /** One table of the clinical model: its [[ClinicalInputs]] field
-      * (also its directory in a [[writeClinicalCatalog]] layout) and
-      * its file in an input directory. */
-    final case class Table(field: String, file: String) {
-      /** The sanitized file name: the entity's stage-1 directory, its
-        * dictionary schema name and its [[PreProcess.ClinicalEntities]]
-        * key. */
+      * (also its directory in a [[writeClinicalCatalog]] layout), its
+      * file in an input directory and, for an entity, the key columns
+      * its surrogate key hashes ([[PreProcess.mintKey]]). */
+    final case class Table(
+        field: String, file: String, keyCols: Seq[String] = Nil) {
+      /** The sanitized file name: the entity's stage-1 directory and
+        * its dictionary schema name. */
       def stage: String = GraftFunctions.sanitize(file)
+
+      /** The file stem: the entity name its surrogate key and internal
+        * id carry (`sample_registration`, `follow_up`, …). */
+      def entity: String = file.takeWhile(_ != '.')
     }
 
-    /** The 12 entity TSVs, in field order. */
-    val Entities: Seq[Table] = Seq(
-      Table("donor", "donor.tsv"), Table("study", "study.tsv"),
-      Table("phenotype", "phenotype.tsv"), Table("file", "file.tsv"),
-      Table("biospecimen", "biospecimen.tsv"),
-      Table("samples", "sample_registration.tsv"),
-      Table("diagnosis", "diagnosis.tsv"),
-      Table("treatment", "treatment.tsv"),
-      Table("followUp", "follow_up.tsv"), Table("exposure", "exposure.tsv"),
-      Table("family", "family.tsv"),
-      Table("familyHistory", "family_history.tsv"))
+    /** The 12 entity TSVs, in field order, with the reference's key
+      * columns (PreProcessUtils.scala:17-91). */
+    val Entities: Seq[Table] = {
+      val donor = Seq("study_id", "submitter_donor_id")
+      Seq(
+        Table("donor", "donor.tsv", donor),
+        Table("study", "study.tsv", Seq("study_id")),
+        Table("phenotype", "phenotype.tsv",
+          donor ++ Seq("submitter_phenotype_id", "phenotype_HPO_code")),
+        Table("file", "file.tsv", donor :+ "file_name"),
+        Table("biospecimen", "biospecimen.tsv",
+          donor :+ "submitter_biospecimen_id"),
+        Table("samples", "sample_registration.tsv",
+          donor ++ Seq("submitter_biospecimen_id", "submitter_sample_id")),
+        Table("diagnosis", "diagnosis.tsv",
+          donor :+ "submitter_diagnosis_id"),
+        Table("treatment", "treatment.tsv",
+          donor :+ "submitter_treatment_id"),
+        Table("followUp", "follow_up.tsv", donor :+ "submitter_follow_up_id"),
+        Table("exposure", "exposure.tsv", donor),
+        Table("family", "family.tsv",
+          Seq("study_id", "submitter_family_id", "submitter_donor_id")),
+        Table("familyHistory", "family_history.tsv",
+          donor :+ "submitter_family_condition_id"))
+    }
 
     /** The 4 ontology term files, in field order after the entities. */
     val Terms: Seq[Table] = Seq(
@@ -563,12 +582,12 @@ object Indexes {
     // scanned once for it, inside the rebuild's own job, with no
     // driver round-trip
     val priorUniverse = summaryUniverse(prior)
-    // lazy checkpoint: the rebuilt docs have two readers (the
+    // local checkpoint: the rebuilt docs have two readers (the
     // full-universe aggregation below and the output union) —
     // materialize the changed-slice build once instead of running it
     // per reader
-    val rebuilt = graft.core.LazyCheckpoint(studyIndex(changedIn, meta,
-      shared = None, extraCatKeys = Some(priorUniverse)))
+    val rebuilt = studyIndex(changedIn, meta,
+      shared = None, extraCatKeys = Some(priorUniverse)).localCheckpoint()
     // full universe for the unchanged-doc patch: the rebuilt docs'
     // own matrices already carry prior ∪ introduced (their lattice
     // zero-filled against extraCatKeys) — aggregated to ONE row of
@@ -690,9 +709,9 @@ object Indexes {
       .readCurrent(spark, s"$dir/universe")
     // two consumers (the partition overwrite and the universe scan)
     // plus the returned count — build the changed slice once
-    val rebuilt = graft.core.LazyCheckpoint(studyIndex(
+    val rebuilt = studyIndex(
       filterStudies(in, changed), meta,
-      shared = None, extraCatKeys = Some(priorUniverse)))
+      shared = None, extraCatKeys = Some(priorUniverse)).localCheckpoint()
     graft.sources.Sinks.overwritePartitions(
       rebuilt.withColumn("__study_pt", col("study_id")),
       s"$dir/docs", Seq("__study_pt"))
@@ -722,7 +741,7 @@ object Indexes {
       in: ClinicalInputs, changed: Seq[String]): Long = {
     require(changed.nonEmpty,
       "refreshDocIndexStore needs at least one changed study")
-    val rebuilt = graft.core.LazyCheckpoint(build(filterStudies(in, changed)))
+    val rebuilt = build(filterStudies(in, changed)).localCheckpoint()
     graft.sources.Sinks.overwritePartitions(
       rebuilt.withColumn("__study_pt", col("study_id")),
       s"$dir/docs", Seq("__study_pt"))

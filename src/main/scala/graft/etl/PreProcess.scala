@@ -18,48 +18,7 @@ import org.apache.spark.sql.functions._
   * distributed on the key column instead of round-tripping the driver.
   */
 object PreProcess {
-
-  /** Per-entity surrogate-key recipe: the reference hashes "_"-joined
-    * (entity name, key columns) per clinical entity
-    * (PreProcessUtils.scala:17-91). */
-  final case class EntitySpec(entity: String, keyCols: Seq[String])
-
-  /** The reference's twelve clinical entities and their key columns,
-    * keyed by sanitized table name (PreProcessUtils.scala:17-91). */
-  val ClinicalEntities: Map[String, EntitySpec] = Map(
-    "study" -> EntitySpec("study", Seq("study_id")),
-    "donor" -> EntitySpec("donor", Seq("study_id", "submitter_donor_id")),
-    "diagnosis" -> EntitySpec(
-      "diagnosis",
-      Seq("study_id", "submitter_donor_id", "submitter_diagnosis_id")),
-    "phenotype" -> EntitySpec(
-      "phenotype",
-      Seq("study_id", "submitter_donor_id", "submitter_phenotype_id",
-        "phenotype_HPO_code")),
-    "biospecimen" -> EntitySpec(
-      "biospecimen",
-      Seq("study_id", "submitter_donor_id", "submitter_biospecimen_id")),
-    "sampleregistration" -> EntitySpec(
-      "sample_registration",
-      Seq("study_id", "submitter_donor_id", "submitter_biospecimen_id",
-        "submitter_sample_id")),
-    "treatment" -> EntitySpec(
-      "treatment",
-      Seq("study_id", "submitter_donor_id", "submitter_treatment_id")),
-    "followup" -> EntitySpec(
-      "follow_up",
-      Seq("study_id", "submitter_donor_id", "submitter_follow_up_id")),
-    "exposure" -> EntitySpec(
-      "exposure", Seq("study_id", "submitter_donor_id")),
-    "family" -> EntitySpec(
-      "family",
-      Seq("study_id", "submitter_family_id", "submitter_donor_id")),
-    "familyhistory" -> EntitySpec(
-      "family_history",
-      Seq("study_id", "submitter_donor_id",
-        "submitter_family_condition_id")),
-    "file" -> EntitySpec(
-      "file", Seq("study_id", "submitter_donor_id", "file_name")))
+  import Indexes.ClinicalInputs.Table
 
   /** Pluggable internal-id source. */
   trait IdResolver {
@@ -96,19 +55,20 @@ object PreProcess {
   }
 
   /** Stamp `entity_kind` + sha1 `entity_key` (the reference's
-    * cqdg_entity / cqdg_hash pair, PreProcessUtils.scala:17-91). */
-  def mintKey(df: DataFrame, spec: EntitySpec): DataFrame =
-    df.withColumn("entity_kind", lit(spec.entity))
+    * cqdg_entity / cqdg_hash pair: sha1 of the "_"-joined entity name
+    * and key columns, PreProcessUtils.scala:17-91). */
+  def mintKey(df: DataFrame, t: Table): DataFrame =
+    df.withColumn("entity_kind", lit(t.entity))
       .withColumn("entity_key",
-        GraftFunctions.entityKey(spec.entity, spec.keyCols.map(col): _*))
+        GraftFunctions.entityKey(t.entity, t.keyCols.map(col): _*))
 
   /** Mint the key, resolve and attach `internal_<entity>_id`, drop the
     * raw key (the reference drops cqdg_hash after the id join,
     * PreProcessUtils.scala:100-103). */
   def attachInternalId(
-      df: DataFrame, spec: EntitySpec, resolver: IdResolver): DataFrame = {
-    val minted = mintKey(df, spec)
-    val idName = s"internal_${spec.entity}_id"
+      df: DataFrame, t: Table, resolver: IdResolver): DataFrame = {
+    val minted = mintKey(df, t)
+    val idName = s"internal_${t.entity}_id"
     val withId = resolver.asColumn match {
       case Some(c) => minted.withColumn(idName, c)
       case None =>
@@ -143,12 +103,11 @@ object PreProcess {
       resolver: IdResolver = HashDerivedIds,
       studyMeta: Seq[(String, String)] = Seq.empty): DataFrame = {
     val sanitized = GraftFunctions.sanitize(name)
-    val spec = ClinicalEntities.getOrElse(
-      sanitized,
-      throw new IllegalArgumentException(s"no entity spec for $name"))
-    val withId = attachInternalId(df, spec, resolver)
-    val allowed =
-      schema ++ Seq("entity_kind", s"internal_${spec.entity}_id")
+    val t = Indexes.ClinicalInputs.Entities.find(_.stage == sanitized)
+      .getOrElse(
+        throw new IllegalArgumentException(s"no entity spec for $name"))
+    val withId = attachInternalId(df, t, resolver)
+    val allowed = schema ++ Seq("entity_kind", s"internal_${t.entity}_id")
     val pruned = whitelist(withId, allowed)
     if (sanitized == "study") stampMetadata(pruned, studyMeta) else pruned
   }

@@ -123,7 +123,7 @@ object Cooccurrence {
     // corpus and re-generates every pair — Catalyst does not reuse the
     // aggregate exchange across the branches (measured: 6 corpus scans
     // unchecked, 1 with the checkpoint; PlanShapeSpec pins it)
-    val cnt = graft.core.LazyCheckpoint(pairCounts(docs, tokens, window))
+    val cnt = pairCounts(docs, tokens, window).localCheckpoint()
     val ma = cnt.groupBy("a").agg(sum("n_ab").as("n_a"))
     val mb = cnt.groupBy("b").agg(sum("n_ab").as("n_b"))
     val total = cnt.agg(sum("n_ab").as("n"))

@@ -559,11 +559,11 @@ object Dedup {
     // pipeline (df → canonical order → prefixes) AND both sides of
     // the candidate rescore; without a materialization the shingle
     // regex — the single most expensive map-side step — re-runs per
-    // consumer. Lazy local checkpoint: first action materializes,
-    // the rest read executor-local blocks.
-    val sets = graft.core.LazyCheckpoint(docs
+    // consumer. The local checkpoint materializes it once; every
+    // consumer reads executor-local blocks.
+    val sets = docs
       .select(col(id).as("__id"), array_distinct(shingles).as("__sh"))
-      .filter(size(col("__sh")) > 0))
+      .filter(size(col("__sh")) > 0).localCheckpoint()
     val ordered = orderedTokenHashes(sets)
     val prefixed = ordered.select(
       col("__id"),
@@ -652,10 +652,10 @@ object Dedup {
       threshold: Double,
       anchor: Column): DataFrame = {
     require(threshold > 0 && threshold <= 1, s"threshold in (0,1]: $threshold")
-    val sets = graft.core.LazyCheckpoint(docs
+    val sets = docs
       .select(col(id).as("__id"), array_distinct(shingles).as("__sh"),
         anchor.as("__anc"))
-      .filter(size(col("__sh")) > 0))
+      .filter(size(col("__sh")) > 0).localCheckpoint()
     // anchor token universe (budget-scaled): restricts the corpus df
     // aggregation to tokens that can matter — counts are still GLOBAL
     // occurrence counts of those tokens, and one-sided completeness
@@ -680,14 +680,14 @@ object Dedup {
         struct(col("__df"), col("__th"), col("__tok"))))
         .getField("__th").as("__ord"))
     // pinned: consumed by the prefix-token broadcast AND the join
-    val prefixed = graft.core.LazyCheckpoint(anchorOrd.select(
+    val prefixed = anchorOrd.select(
       col("__id"),
       size(col("__ord")).as("__n"),
       posexplode(slice(col("__ord"), lit(1),
         (size(col("__ord"))
           - ceil(lit(threshold) * size(col("__ord")) - lit(1e-9)) + 1)
           .cast("int")))
-        .as(Seq("__pos", "__tok"))))
+        .as(Seq("__pos", "__tok"))).localCheckpoint()
     // corpus postings, PRUNED MAP-SIDE to the anchors' prefix tokens
     // before any exchange: the broadcast semi-join keeps only
     // occurrences of the (rare, budget-scaled) prefix tokens, so the
@@ -796,9 +796,9 @@ object Dedup {
       shingles: Column,
       threshold: Double): DataFrame = {
     require(threshold > 0 && threshold <= 1, s"threshold in (0,1]: $threshold")
-    val sets = graft.core.LazyCheckpoint(docs
+    val sets = docs
       .select(col(id).as("__id"), array_distinct(shingles).as("__sh"))
-      .filter(size(col("__sh")) > 0))
+      .filter(size(col("__sh")) > 0).localCheckpoint()
     val ordered = orderedTokenHashes(sets)
     // contained side: rarest-first prefix; containing side: full list.
     // Both posexplode the same ordered array — one generator each, the
@@ -845,8 +845,9 @@ object Dedup {
     // distinct-shingle frame feeds signature banding and both rescore
     // sides — minhash over the distinct set equals minhash over the
     // raw bag, so candidates are unchanged
-    val sets = graft.core.LazyCheckpoint(
-      docs.select(col(id), array_distinct(shingles).as("__sh")))
+    val sets =
+      docs.select(col(id), array_distinct(shingles).as("__sh"))
+      .localCheckpoint()
     val cand = candidatePairs(sets, id, col("__sh"), numHashes, bands)
     cand
       .join(sets.select(col(id).as("a"), col("__sh").as("__sha")), Seq("a"))
@@ -948,11 +949,12 @@ object Dedup {
       eval: DataFrame, evalId: String, evalText: Column,
       threshold: Double = 0.8, n: Int = 3,
       numHashes: Int = 64, bands: Int = 16): DataFrame = {
-    val tSets = graft.core.LazyCheckpoint(train.select(
-      col(id), array_distinct(Text.shingles(text, n)).as("__tsh")))
-    val eSets = graft.core.LazyCheckpoint(eval.select(
+    val tSets = train.select(
+      col(id), array_distinct(Text.shingles(text, n)).as("__tsh"))
+      .localCheckpoint()
+    val eSets = eval.select(
       col(evalId).as("__eid"),
-      array_distinct(Text.shingles(evalText, n)).as("__esh")))
+      array_distinct(Text.shingles(evalText, n)).as("__esh")).localCheckpoint()
     val tBanded = bandedBuckets(tSets, id, col("__tsh"), numHashes, bands)
     val eBanded = bandedBuckets(
       eSets.select(col("__eid"), col("__esh")), "__eid", col("__esh"),
@@ -986,11 +988,12 @@ object Dedup {
       eval: DataFrame, evalId: String, evalText: Column,
       threshold: Double = 0.8, n: Int = 3,
       numHashes: Int = 64, bands: Int = 16): DataFrame = {
-    val tSets = graft.core.LazyCheckpoint(train.select(
-      col("*"), array_distinct(Text.shingles(text, n)).as("__tsh")))
-    val eSets = graft.core.LazyCheckpoint(eval.select(
+    val tSets = train.select(
+      col("*"), array_distinct(Text.shingles(text, n)).as("__tsh"))
+      .localCheckpoint()
+    val eSets = eval.select(
       col(evalId).as("__eid"),
-      array_distinct(Text.shingles(evalText, n)).as("__esh")))
+      array_distinct(Text.shingles(evalText, n)).as("__esh")).localCheckpoint()
     val tBanded = bandedBuckets(
       tSets.select(col(id), col("__tsh")), id, col("__tsh"),
       numHashes, bands)

@@ -49,9 +49,9 @@ object Density {
       eps: Long, minPts: Int, ccMaxIters: Int = 30): DataFrame = {
     require(eps > 0, s"eps must be positive: $eps")
     require(minPts >= 1, s"minPts must be >= 1: $minPts")
-    val pts = graft.core.LazyCheckpoint(points.select(
+    val pts = points.select(
       col(id).as("pid"), col(x).cast("long").as("px"),
-      col(y).cast("long").as("py")))
+      col(y).cast("long").as("py")).localCheckpoint()
     def cellOf(c: String) = expr(s"($c - pmod($c, ${eps}L)) div ${eps}L")
     val homed = pts.select(col("pid"), col("px"), col("py"),
       cellOf("px").as("cx"), cellOf("py").as("cy"))
@@ -66,13 +66,13 @@ object Density {
     val dy = (col("qy") - col("py")).cast("decimal(19,0)")
     // directed neighbor pairs (qid → pid), both directions present by
     // construction; the per-pair shuffle key is the cell
-    val pairs = graft.core.LazyCheckpoint(
+    val pairs =
       probes.join(homed.select(col("pid"), col("px"), col("py"),
           col("cx"), col("cy")), Seq("cx", "cy"))
         .filter(col("qid") =!= col("pid"))
         .filter(dx * dx + dy * dy <=
           lit(java.math.BigDecimal.valueOf(eps).pow(2)))
-        .select(col("qid"), col("pid")))
+        .select(col("qid"), col("pid")).localCheckpoint()
     val core = pairs.groupBy(col("qid"))
       .agg((count(lit(1)) + 1).as("nsize"))
       .filter(col("nsize") >= minPts)

@@ -304,11 +304,12 @@ object Drift {
       df: DataFrame, category: org.apache.spark.sql.Column,
       slice: org.apache.spark.sql.Column): DataFrame = {
     val dec = "decimal(38,0)"
-    val cells = graft.core.LazyCheckpoint(df
+    val cells = df
       .select(category.cast("string").as("__cat"),
         slice.cast("string").as("__sl"))
       .filter(col("__cat").isNotNull && col("__sl").isNotNull)
-      .groupBy(col("__cat"), col("__sl")).agg(count(lit(1)).as("__o")))
+      .groupBy(col("__cat"), col("__sl")).agg(count(lit(1)).as("__o"))
+      .localCheckpoint()
     val rows = cells.groupBy(col("__cat")).agg(sum(col("__o")).as("__r"))
     val colsM = cells.groupBy(col("__sl")).agg(sum(col("__o")).as("__c"))
     val tot = cells.agg(coalesce(sum(col("__o")), lit(0L)).as("__n"),

@@ -70,32 +70,42 @@ private[ops] final class LongEdges(
 /** Open-addressing long→dense-int index (linear probing, power-of-two
   * capacity, load ≤ ½): node ids dense-index with no boxed tuples or
   * HashMap entry objects (≤ ~36 B/node). Sized for `expected` nodes;
-  * ids past that (a kernel's seeds) grow the table. */
+  * ids past that (a kernel's seeds) grow the table. `Long.MinValue`
+  * marks an empty slot, so that id keeps its index in a field of its
+  * own instead of a slot. */
 private[ops] final class LongIndex(expected: Int) {
   private var cap = 16
   while (cap < 2 * expected) cap <<= 1
   private var keys = emptyKeys(cap)
   private var vals = new Array[Int](cap)
   private var ids = new Array[Long](math.max(2, expected))
+  private var minValueIndex = -1
   var n = 0
   private def slot(k: Long): Int = {
     var h = java.lang.Long.hashCode(k * -7046029254386353131L) & (cap - 1)
     while (keys(h) != Long.MinValue && keys(h) != k) h = (h + 1) & (cap - 1)
     h
   }
-  def indexOf(k: Long): Int = {
-    val h = slot(k)
-    if (keys(h) == k) vals(h)
-    else if (2 * (n + 1) > cap) { grow(); indexOf(k) }
-    else {
-      if (n == ids.length) ids = java.util.Arrays.copyOf(ids, 2 * n)
-      keys(h) = k; vals(h) = n; ids(n) = k; n += 1; n - 1
+  def indexOf(k: Long): Int =
+    if (k == Long.MinValue) {
+      if (minValueIndex < 0) minValueIndex = append(k)
+      minValueIndex
+    } else {
+      val h = slot(k)
+      if (keys(h) == k) vals(h)
+      else if (2 * (n + 1) > cap) { grow(); indexOf(k) }
+      else { keys(h) = k; vals(h) = n; append(k) }
     }
+  private def append(k: Long): Int = {
+    if (n == ids.length) ids = java.util.Arrays.copyOf(ids, 2 * n)
+    ids(n) = k; n += 1; n - 1
   }
-  def lookup(k: Long): Int = { // -1 when absent (no insert)
-    val h = slot(k)
-    if (keys(h) == k) vals(h) else -1
-  }
+  def lookup(k: Long): Int = // -1 when absent (no insert)
+    if (k == Long.MinValue) minValueIndex
+    else {
+      val h = slot(k)
+      if (keys(h) == k) vals(h) else -1
+    }
   def id(v: Int): Long = ids(v)
   private def grow(): Unit = {
     val (oldKeys, oldVals) = (keys, vals)

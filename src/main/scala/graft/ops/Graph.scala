@@ -565,7 +565,7 @@ object Graph {
     require(iters >= 1 && iters <= 50, s"iters out of range: $iters")
     // pin the (possibly expensive) upstream edge derivation ONCE; the
     // count both gates the kernel and is the materializing action
-    val symC = graft.core.LazyCheckpoint(symmetric(edges))
+    val symC = symmetric(edges).localCheckpoint()
     val small = DriverKernel.rows(symC, smallGraphEdges)
     if (small.isDefined)
       return pageRankKernel(edges.sparkSession, symC.schema("src").dataType,
@@ -601,7 +601,7 @@ object Graph {
           (lit(base) + expr(s"(85 * s) div 100")).as("rank_u"))
       ranks =
         if (i % checkpointEvery == 0 && i < iters)
-          graft.core.LazyCheckpoint(next)
+          next.localCheckpoint()
         else next
     }
     ranks
@@ -679,10 +679,10 @@ object Graph {
       iters: Int = 5,
       smallGraphEdges: Long = DriverKernel.MaxEdges): DataFrame = {
     require(iters >= 1 && iters <= 50, s"iters out of range: $iters")
-    val eC = graft.core.LazyCheckpoint(
+    val eC =
       edges.select(col("a").as("src"), col("b").as("dst"))
         .filter(col("src") =!= col("dst"))
-        .distinct())
+        .distinct().localCheckpoint()
     val small = DriverKernel.longEdges(eC, smallGraphEdges)
     if (small.isDefined)
       return pageRankDirectedKernel(edges.sparkSession, small.get, iters)
@@ -732,7 +732,7 @@ object Graph {
       // unbounded storage pressure on large graphs. Persist does NOT
       // truncate the plan TEXT, which still doubles per round (the
       // cached subtree appears under both consumers), so every 6th
-      // round a plan-truncating LazyCheckpoint caps the analyzer tree
+      // round a plan-truncating localCheckpoint caps the analyzer tree
       // (deep unrolls near the iters=50 bound would otherwise OOM
       // treeString — the failure the connectedComponents doc records).
       // Checkpoint rounds (1-in-6) stay resident until the
@@ -740,7 +740,7 @@ object Graph {
       // on checkpoint blocks — bounding the residual leak at ~iters/6
       // vertex frames; the final round stays cached for the caller.
       val cached =
-        if (i % 6 == 0) graft.core.LazyCheckpoint(next)
+        if (i % 6 == 0) next.localCheckpoint()
         else next.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       cached.count()
       prevRound.foreach(_.unpersist(false))
@@ -839,7 +839,7 @@ object Graph {
         .join(keep.withColumnRenamed("__k", "src"), Seq("src"), "left_semi")
         .join(keep.withColumnRenamed("__k", "dst"), Seq("dst"), "left_semi")
         .select(col("src"), col("dst"))
-      e = if (r % 3 == 0 && r < rounds) graft.core.LazyCheckpoint(next)
+      e = if (r % 3 == 0 && r < rounds) next.localCheckpoint()
       else next
     }
     e.groupBy(col("src").as("node"))
@@ -874,7 +874,7 @@ object Graph {
       edges: DataFrame, seeds: DataFrame, iters: Int = 5,
       smallGraphEdges: Long = DriverKernel.MaxEdges): DataFrame = {
     require(iters >= 1 && iters <= 50, s"iters out of range: $iters")
-    val symC = graft.core.LazyCheckpoint(symmetric(edges))
+    val symC = symmetric(edges).localCheckpoint()
     val small = DriverKernel.rows(symC, smallGraphEdges)
     if (small.isDefined) {
       // seed sets are request-sized by nature (scaladoc above) — the
@@ -916,7 +916,7 @@ object Graph {
             expr(s"(85 * s) div 100")).as("rank_u"))
       ranks =
         if (i % checkpointEvery == 0 && i < iters)
-          graft.core.LazyCheckpoint(next)
+          next.localCheckpoint()
         else next
     }
     ranks
@@ -1010,8 +1010,7 @@ object Graph {
     * pay an exchange AND a per-partition SORT every round, while
     * `min_by(label, (-n, label))` rides a partial aggregation
     * (degree-bounded group state, no sort) into the same exchange.
-    * No driver action in the loop; lineage relief every 2 rounds via
-    * the lazy checkpoint.
+    * Lineage relief every 2 rounds via a local checkpoint.
     *
     * @return (node, community) — community = converged-or-iters label
     */
@@ -1102,7 +1101,7 @@ object Graph {
         .select(col("node"),
           coalesce(col("__new"), col("label")).as("label"))
       labels =
-        if (i % 2 == 0 && i < iters) graft.core.LazyCheckpoint(next)
+        if (i % 2 == 0 && i < iters) next.localCheckpoint()
         else next
     }
     labels.select(col("node"), col("label").as("community"))

@@ -194,8 +194,8 @@ object LabelModel {
       s"2..5 labeling functions (got ${votes.size})")
     val named = votes.zipWithIndex.map { case (v, i) =>
       v.cast("string").as(s"__v${i + 1}") }
-    val withVotes = graft.core.LazyCheckpoint(
-      df.select(col("*") +: named: _*))
+    val withVotes =
+      df.select(col("*") +: named: _*).localCheckpoint()
     val counts = withVotes
       .groupBy(votes.indices.map(i =>
         col(s"__v${i + 1}").as(s"v${i + 1}")): _*)

@@ -73,9 +73,10 @@ object LangModel {
     * [[Cooccurrence]] trap).
     */
   def train(corpus: DataFrame, id: String, tokens: Column): BigramLm = {
-    val counts = graft.core.LazyCheckpoint(
+    val counts =
       bigrams(corpus, id, tokens)
-        .groupBy(col("a"), col("b")).agg(count(lit(1)).as("n_ab")))
+        .groupBy(col("a"), col("b")).agg(count(lit(1)).as("n_ab"))
+        .localCheckpoint()
     val contexts = counts.groupBy(col("a")).agg(sum(col("n_ab")).as("n_a"))
     val vocab = counts
       .select(explode(array(col("a"), col("b"))).as("t"))
@@ -135,9 +136,10 @@ object LangModel {
     * the corpus per consumer).
     */
   def trainKn(corpus: DataFrame, id: String, tokens: Column): KnBigramLm = {
-    val counts = graft.core.LazyCheckpoint(
+    val counts =
       bigrams(corpus, id, tokens)
-        .groupBy(col("a"), col("b")).agg(count(lit(1)).as("n_ab")))
+        .groupBy(col("a"), col("b")).agg(count(lit(1)).as("n_ab"))
+        .localCheckpoint()
     val contexts = counts.groupBy(col("a"))
       .agg(sum(col("n_ab")).cast("long").as("n_a"),
         count(lit(1)).as("d_a"))

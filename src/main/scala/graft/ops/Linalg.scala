@@ -64,7 +64,7 @@ object Linalg {
   def gramMatrix(df: DataFrame, vec: String, dim: Int): DataFrame = {
     require(dim >= 1, s"dim must be positive: $dim")
     import df.sparkSession.implicits._
-    val cells = graft.core.LazyCheckpoint(
+    val cells =
       df.select(col(vec).cast("array<double>").as("v")).as[Array[Double]]
         .mapPartitions { it =>
           val acc = Array.fill(dim, dim)(BigInt(0))
@@ -98,7 +98,7 @@ object Linalg {
             yield MomentCell(i, j, acc(i)(j).toString)
           val margins = (0 until dim).map(i => MomentCell(i, -1, s(i).toString))
           (sxx ++ margins :+ MomentCell(-1, -1, n.toString)).iterator
-        }.toDF())
+        }.toDF().localCheckpoint()
     val dec = col("p").cast("decimal(38,0)")
     val sxx = cells.filter(col("j") >= 0)
       .groupBy(col("i"), col("j")).agg(sum(dec).as("sxx"))

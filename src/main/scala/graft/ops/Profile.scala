@@ -282,9 +282,10 @@ object Profile {
     // gets (measured: 5.3 s vs 0.6 s at sf0.1). The checkpoint cuts
     // the lineage so the corpus scan evaluates each label exactly
     // once; it materializes only label² rows.
-    val cells = graft.core.LazyCheckpoint(df
+    val cells = df
         .select(a.cast("string").as("__a"), b.cast("string").as("__b"))
-        .groupBy(col("__a"), col("__b")).agg(count(lit(1)).as("__n")))
+        .groupBy(col("__a"), col("__b")).agg(count(lit(1)).as("__n"))
+        .localCheckpoint()
       .filter(col("__a").isNotNull && col("__b").isNotNull)
     val na = cells.groupBy(col("__a")).agg(sum("__n").as("__na"))
     val nb = cells.groupBy(col("__b")).agg(sum("__n").as("__nb"))
@@ -449,9 +450,9 @@ object Profile {
     // vs 1.0 s at sf0.1 (the cohenKappa scan-pushdown note's sibling).
     // The pin is O(corpus) but thin (unit + R strings), the same class
     // as the counts pin below.
-    val rated = graft.core.LazyCheckpoint(df.select(
+    val rated = df.select(
       unit.as("__u") +: ratings.zipWithIndex.map { case (r, i) =>
-        r.cast("string").as(s"__r$i") }: _*))
+        r.cast("string").as(s"__r$i") }: _*).localCheckpoint()
     val melted = rated
       .select(col("__u"),
         explode(array(ratings.indices.map(i => col(s"__r$i")): _*))
@@ -461,9 +462,9 @@ object Profile {
     // the coincidence self-join — without the checkpoint the rater
     // expressions (arbitrarily expensive label CASEs, see cohenKappa's
     // measured note) re-evaluate on every consumer's corpus scan
-    val counts = graft.core.LazyCheckpoint(
+    val counts =
       melted.groupBy(col("__u"), col("__v"))
-        .agg(count(lit(1)).as("__nuc")))
+        .agg(count(lit(1)).as("__nuc")).localCheckpoint()
     val mu = counts.groupBy(col("__u")).agg(sum(col("__nuc")).as("__mu"))
       .filter(col("__mu") >= 2)
     val withMu = counts.join(mu, Seq("__u"))

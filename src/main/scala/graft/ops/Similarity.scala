@@ -1328,11 +1328,12 @@ object Similarity {
   def marginMine(
       src: DataFrame, tgt: DataFrame,
       id: String, vec: String, k: Int): DataFrame = {
-    val fwd = graft.core.LazyCheckpoint(
+    val fwd =
       bruteForceTopK(corpus = tgt, queries = src, id, vec, k)
         .select(col("query_id").as("src_id"),
           col("neighbor_id").as("tgt_id"),
-          round(col("cosine") * lit(1e6), 0).cast("long").as("c6")))
+          round(col("cosine") * lit(1e6), 0).cast("long").as("c6"))
+        .localCheckpoint()
     val sx = fwd.groupBy(col("src_id")).agg(sum(col("c6")).as("__sx"))
     val ys = fwd.select(col("tgt_id")).distinct()
     val bwd = bruteForceTopK(

@@ -18,6 +18,31 @@ import org.apache.spark.sql.functions._
   */
 object Summary {
 
+  /** A construction-lazy local checkpoint: the lattice builders below
+    * are documented (and PlanShapeSpec-pinned) to launch no Spark job
+    * until the caller acts, so they cannot pin with the eager
+    * `localCheckpoint()` every other operator uses. Planning happens
+    * with AQE disabled — `localCheckpoint(eager = false)` is NOT lazy
+    * under adaptive execution: `AdaptiveSparkPlanExec.execute()` would
+    * materialize every intermediate query stage at construction. The
+    * session conf flips for the duration of the (job-free) planning
+    * call, which another driver thread planning concurrently in the
+    * same session could observe. The rule that keeps this safe: a
+    * lattice is built on the calling thread, before any concurrent
+    * action starts ([[graft.core.ConcurrentActions]] runs actions on
+    * frames built beforehand). Like every local checkpoint, the blocks
+    * carry no lineage: executor loss fails the query instead of
+    * recomputing it.
+    */
+  private def lazily(df: DataFrame): DataFrame = {
+    val conf = df.sparkSession.conf
+    val key = "spark.sql.adaptive.enabled"
+    val prev = conf.get(key, "true")
+    conf.set(key, "false")
+    try df.localCheckpoint(eager = false)
+    finally conf.set(key, prev)
+  }
+
   /** countDistinct of `distinctCounts` per (groupKeys × category), with
     * zero-filled rows for categories absent in a group.
     *
@@ -29,11 +54,10 @@ object Summary {
     * The partial is dimension-sized by construction (groups ×
     * categories present), so it is localCheckpointed once and feeds
     * all three consumers from cache. The checkpoint is LAZY
-    * ([[graft.core.LazyCheckpoint]].lazily — plain `eager = false` still runs
-    * the shuffle map stages under AQE): constructing the frame
-    * launches no job (PlanShapeSpec pins this) — the partial
-    * materializes on first action and is shared thereafter.
-    * Fault-tolerance trade-off documented on [[graft.core.LazyCheckpoint]].
+    * (`lazily` — plain `eager = false` still runs the shuffle map
+    * stages under AQE): constructing the frame launches no job
+    * (PlanShapeSpec pins this) — the partial materializes on first
+    * action and is shared thereafter.
     */
   def lattice(
       facts: DataFrame,
@@ -43,7 +67,7 @@ object Summary {
     val aggs = distinctCounts.toSeq.sortBy(_._1).map { case (as, c) =>
       countDistinct(c).as(as)
     }
-    val partial = graft.core.LazyCheckpoint.lazily(facts
+    val partial = lazily(facts
       .groupBy((groupKeys :+ categoryCol).map(col): _*)
       .agg(aggs.head, aggs.tail: _*))
     val groups = partial.select(groupKeys.map(col): _*).distinct()
@@ -103,12 +127,10 @@ object Summary {
     * `kind` discriminator column). Keys are cast to string; null keys
     * are dropped before aggregation.
     *
-    * The aggregated partial is lazily checkpointed
-    * ([[graft.core.LazyCheckpoint]].lazily) so the groups/keys/zero-fill
-    * consumers share one computation instead of re-running the fact
-    * scan three times, and constructing the frame costs nothing until
-    * an action runs. Fault-tolerance trade-off (lineage-free local
-    * blocks) documented on [[graft.core.LazyCheckpoint]].
+    * The aggregated partial is lazily checkpointed (`lazily`) so
+    * the groups/keys/zero-fill consumers share one computation
+    * instead of re-running the fact scan three times, and
+    * constructing the frame costs nothing until an action runs.
     */
   def latticeUnpivot(
       facts: DataFrame,
@@ -116,7 +138,7 @@ object Summary {
       fields: Seq[String],
       distinctCounts: Map[String, Column],
       extraKeys: Option[DataFrame] = None): DataFrame = {
-    val partial = graft.core.LazyCheckpoint.lazily(
+    val partial = lazily(
       unpivotPartial(facts, groupKeys, fields, distinctCounts))
     val groups = partial.select((groupKeys :+ "kind").map(col): _*).distinct()
     // extraKeys widens the zero-fill universe beyond what these facts

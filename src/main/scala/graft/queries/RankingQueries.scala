@@ -95,10 +95,11 @@ object RankingQueries {
          |  + coalesce(max(CASE WHEN term = 'spark' THEN w END), 0.0),
          |    9) AS bm25
          |FROM contrib GROUP BY doc_id""".stripMargin) { (s, d) =>
-      // tokenize once: the scalar pass (N, avgdl) materializes the
-      // lazy checkpoint, the scoring pass reads it back
-      val docs = graft.core.LazyCheckpoint(Tables.documents(s, d)
-        .withColumn("__toks", Text.words(Text.normalize(col("text")))))
+      // tokenize once: the checkpoint materializes the tokens, and
+      // the scalar pass (N, avgdl) and the scoring pass read them
+      val docs = Tables.documents(s, d)
+        .withColumn("__toks", Text.words(Text.normalize(col("text"))))
+        .localCheckpoint()
       val scal = docs
         .agg(count(lit(1)), sum(size(col("__toks")).cast("long")))
         .collect()(0)
@@ -214,13 +215,13 @@ object RankingQueries {
            |e0 AS (SELECT a, b FROM p GROUP BY 1, 2
            |       HAVING count(*) >= 5)""".stripMargin,
         iters = 5)) { (s, d) =>
-      val edges = graft.core.LazyCheckpoint(
+      val edges =
         graft.ops.Cooccurrence.pairCounts(
             Tables.documents(s, d),
             tokens = Text.words(Text.normalize(col("text"))),
             window = 3)
           .filter(col("n_ab") >= 5)
-          .select(col("a"), col("b")))
+          .select(col("a"), col("b")).localCheckpoint()
       graft.ops.Graph.pageRankInt(edges, iters = 5)
     },
 
@@ -604,9 +605,10 @@ object RankingQueries {
          |WHERE fused_rank <= 10""".stripMargin) { (s, d) =>
       // tokenize ONCE; the lexical ranker scans it as corpus and
       // (filtered) as the query batch
-      val docs = graft.core.LazyCheckpoint(Tables.documents(s, d)
+      val docs = Tables.documents(s, d)
         .select(col("doc_id"),
-          Text.words(Text.normalize(col("text"))).as("__toks")))
+          Text.words(Text.normalize(col("text"))).as("__toks"))
+        .localCheckpoint()
       val lex = Ranking.lexicalOverlapTopK(
           docs, "doc_id", col("__toks"),
           docs.filter(col("doc_id") < 4), "doc_id", col("__toks"),

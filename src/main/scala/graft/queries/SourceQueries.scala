@@ -35,13 +35,9 @@ object SourceQueries {
     * by a warcinfo record the face must filter out. Fixture planting
     * is driver-side by design (bounded slice); the READ under test is
     * the executor-parallel binaryFiles + parse path. */
-  private val warcCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[queries] def warcFixtureDir(
       s: org.apache.spark.sql.SparkSession, d: String): String =
-    warcCache.computeIfAbsent(d, _ => {
-      val dir =
-        s"${graft.core.Scratch.dir("warc_fixture")}/${math.abs(d.hashCode)}"
+    graft.core.Scratch.onceDir("warc_fixture", d) { dir =>
       new java.io.File(dir).mkdirs()
       val docs = Tables.documents(s, d)
         .filter(col("doc_id") % 11 === 0 && col("doc_id") < 2200)
@@ -94,8 +90,7 @@ object SourceQueries {
         odds.foreach { case (id, t) =>
           gz.write(member(conv(id, t))); gz.write(member(resp(id, t))) }
       } finally gz.close()
-      dir
-    })
+    }
 
   /** Build-once fixture for the HTTP payload-decode face: the
     * `doc_id % 13 = 0 AND doc_id < 2600` slice written as ONE plain
@@ -109,17 +104,13 @@ object SourceQueries {
     * that are malformed UTF-8, so a wrong decode is visible as
     * U+FFFD), modes 0-2 the document text (lossless UTF-8 round
     * trip). */
-  private val warcDecodeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[queries] val Latin1PageA = "<html><body><p>café #"
   private[queries] val Latin1PageB = " à côté</p></body></html>"
   private[queries] val MetaPageA =
     "<html><head><meta charset=\"iso-8859-1\"></head><body><p>café #"
   private[queries] def warcDecodeFixtureDir(
       s: org.apache.spark.sql.SparkSession, d: String): String =
-    warcDecodeCache.computeIfAbsent(d, _ => {
-      val dir = s"${graft.core.Scratch.dir("warc_decode_fixture")}/" +
-        s"${math.abs(d.hashCode)}"
+    graft.core.Scratch.onceDir("warc_decode_fixture", d) { dir =>
       new java.io.File(dir).mkdirs()
       val docs = Tables.documents(s, d)
         .filter(col("doc_id") % 13 === 0 && col("doc_id") < 2600)
@@ -176,8 +167,7 @@ object SourceQueries {
         }
         f.write(warcRecord(uri, msg))
       } finally f.close()
-      dir
-    })
+    }
 
   /** Oracle-side rebuild of the decode fixture's response pages (one
     * per record, keyed by encoding mode) — shared by
@@ -1893,11 +1883,9 @@ object SourceQueries {
     * dir into the session catalog (bucket metadata cannot ride plain
     * parquet paths). Deterministic content — caching cannot change
     * results, only skip the rewrite. */
-  private val bucketedCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
   private def bucketedPair(
       s: org.apache.spark.sql.SparkSession, d: String): (String, String) =
-    bucketedCache.computeIfAbsent(d, _ => {
+    graft.core.Scratch.once(s"bucketed:$d") {
       val tag = java.lang.Long.toHexString(
         java.lang.Integer.toUnsignedLong(d.hashCode))
       val to = s"b_orders_$tag"
@@ -1909,5 +1897,5 @@ object SourceQueries {
         Tables.customer(s, d).select("c_custkey", "c_mktsegment"),
         tc, Seq("c_custkey"), numBuckets = 16)
       (to, tc)
-    })
+    }
 }

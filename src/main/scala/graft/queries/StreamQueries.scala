@@ -381,13 +381,9 @@ object StreamQueries {
     * three deterministic micro-batches, format="json", with the
     * compaction threshold low enough (2) that the committed layout
     * the face reads back is the COMPACTED one. */
-  private val exportStreamJsonlCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[queries] def exportStreamJsonlDir(
       s: org.apache.spark.sql.SparkSession, d: String): String =
-    exportStreamJsonlCache.computeIfAbsent(d, _ => {
-      val dir = s"${graft.core.Scratch.dir("stream_export_jsonl")}/" +
-        s"${math.abs(d.hashCode)}"
+    graft.core.Scratch.onceDir("stream_export_jsonl", d) { dir =>
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("text")).localCheckpoint()
       (0 until 3).foreach { b =>
@@ -396,19 +392,14 @@ object StreamQueries {
           compactAtDirs = 2, format = "json")(
           docs.filter(col("doc_id") % 3 === b), b.toLong)
       }
-      dir
-    })
+    }
 
   /** Build-once cache for the streamed-export face: documents replayed
     * as three deterministic micro-batches (doc_id mod 3) through
     * [[EventStream.exportShardsSink]]. */
-  private val exportStreamCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[queries] def exportStreamDir(
       s: org.apache.spark.sql.SparkSession, d: String): String =
-    exportStreamCache.computeIfAbsent(d, _ => {
-      val dir =
-        s"${graft.core.Scratch.dir("stream_export")}/${math.abs(d.hashCode)}"
+    graft.core.Scratch.onceDir("stream_export", d) { dir =>
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("text")).localCheckpoint()
       (0 until 3).foreach { b =>
@@ -416,39 +407,29 @@ object StreamQueries {
           octet_length(col("text")), Seq("doc_id", "text"))(
           docs.filter(col("doc_id") % 3 === b), b.toLong)
       }
-      dir
-    })
+    }
 
   /** Build-once cache for the store-backed streaming-components face:
     * the same three micro-batches folded through
     * [[EventStream.componentStoreSink]]. */
-  private val componentsStoreCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[queries] def componentsStoreDir(
       s: org.apache.spark.sql.SparkSession, d: String): String =
-    componentsStoreCache.computeIfAbsent(d, _ => {
-      val dir =
-        s"${graft.core.Scratch.dir("stream_cc_store")}/${math.abs(d.hashCode)}"
+    graft.core.Scratch.onceDir("stream_cc_store", d) { dir =>
       val edges = graft.queries.GraphQueries.edges(s, d, 3).localCheckpoint()
       (0 until 3).foreach { b =>
         EventStream.componentStoreSink(dir)(
           edges.filter((col("a") + col("b")) % 3 === b), b.toLong)
       }
-      dir
-    })
+    }
 
   /** Build-once cache for the streaming-CUSUM face: replay the events
     * table as three time-ordered micro-batches through
     * [[EventStream.cusumSink]]. The carried-state closed form makes
     * the folded scores equal ONE batch CUSUM over the whole history —
     * which is exactly what the oracle recomputes. */
-  private val cusumCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[queries] def cusumDir(
       s: org.apache.spark.sql.SparkSession, d: String): String =
-    cusumCache.computeIfAbsent(d, _ => {
-      val dir =
-        s"${graft.core.Scratch.dir("stream_cusum")}/${math.abs(d.hashCode)}"
+    graft.core.Scratch.onceDir("stream_cusum", d) { dir =>
       val ev = Tables.events(s, d)
         .select(col("event_id"), col("event_type"), col("ts"),
           round(col("value") * 100).cast("long").as("cents"))
@@ -470,28 +451,22 @@ object StreamQueries {
           Seq("ts", "event_id"), col("cents"),
           drift = 6000L, threshold = 50000L)(b, i.toLong)
       }
-      dir
-    })
+    }
 
   /** Build-once cache for the streaming-components face: replay the
     * support-3 co-purchase edges as three micro-batches through
     * [[EventStream.componentSink]] into per-JVM scratch. Deterministic
     * (min-id labels are a pure function of the edge set), so the
     * folded state is oracle-checkable. */
-  private val componentsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[queries] def componentsDir(
       s: org.apache.spark.sql.SparkSession, d: String): String =
-    componentsCache.computeIfAbsent(d, _ => {
-      val dir =
-        s"${graft.core.Scratch.dir("stream_cc")}/${math.abs(d.hashCode)}"
+    graft.core.Scratch.onceDir("stream_cc", d) { dir =>
       val edges = graft.queries.GraphQueries.edges(s, d, 3).localCheckpoint()
       (0 until 3).foreach { b =>
         EventStream.componentSink(dir)(
           edges.filter((col("a") + col("b")) % 3 === b), b.toLong)
       }
-      dir
-    })
+    }
 
   /** Build-once cache for the streaming chat-render face: the derived
     * turns table split into three micro-batches BY TURN INDEX
@@ -500,61 +475,46 @@ object StreamQueries {
     * [[EventStream.chatRenderSink]]. Deterministic (the render is a
     * pure function of the accumulated turn set), so the converged
     * snapshot equals the batch render oracle exactly. */
-  private val chatRenderCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[queries] def chatRenderDir(
       s: org.apache.spark.sql.SparkSession, d: String): String =
-    chatRenderCache.computeIfAbsent(d, _ => {
-      val dir =
-        s"${graft.core.Scratch.dir("stream_chat")}/${math.abs(d.hashCode)}"
+    graft.core.Scratch.onceDir("stream_chat", d) { dir =>
       val turns = graft.queries.ChatQueries.turnsOf(s, d).localCheckpoint()
       (0 until 3).foreach { k =>
         EventStream.chatRenderSink(dir)(
           turns.filter(col("turn_idx") % 3 === k), k.toLong)
       }
-      dir
-    })
+    }
 
   /** Build-once cache for the streaming-KMV face: the documents ids
     * fold through [[EventStream.kmvSink]] in three micro-batches;
     * min-k mergeability makes the folded state equal one sketch over
     * the whole corpus, which the oracle recomputes. */
-  private val kmvCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[queries] def kmvDir(
       s: org.apache.spark.sql.SparkSession, d: String): String =
-    kmvCache.computeIfAbsent(d, _ => {
-      val dir =
-        s"${graft.core.Scratch.dir("stream_kmv")}/${math.abs(d.hashCode)}"
+    graft.core.Scratch.onceDir("stream_kmv", d) { dir =>
       val docs = Tables.documents(s, d).select(col("doc_id"))
         .localCheckpoint()
       (0 until 3).foreach { b =>
         EventStream.kmvSink(dir, "doc_id", k = 128)(
           docs.filter(col("doc_id") % 3 === b), b.toLong)
       }
-      dir
-    })
+    }
 
   /** Build-once cache for the streaming log-histogram face: document
     * lengths fold through [[EventStream.logHistSink]] in three
     * micro-batches; count addition makes the folded bucket table
     * equal one sketch over the whole corpus, which the oracle
     * recomputes. */
-  private val logHistCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[queries] def logHistDir(
       s: org.apache.spark.sql.SparkSession, d: String): String =
-    logHistCache.computeIfAbsent(d, _ => {
-      val dir =
-        s"${graft.core.Scratch.dir("stream_loghist")}/${math.abs(d.hashCode)}"
+    graft.core.Scratch.onceDir("stream_loghist", d) { dir =>
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("n_chars")).localCheckpoint()
       (0 until 3).foreach { b =>
         EventStream.logHistSink(dir, "n_chars")(
           docs.filter(col("doc_id") % 3 === b), b.toLong)
       }
-      dir
-    })
+    }
 
   /** Build-once cache for the streaming-ingest face: replay the three
     * micro-batches through [[EventStream.nearDupIngestSink]] into a
@@ -562,13 +522,9 @@ object StreamQueries {
     * chains, the drop rule is min-id-greedy, batch membership is
     * doc_id % 3 — so the accepted set is a pure function of the
     * corpus, safe to golden-snapshot. */
-  private val ingestCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[queries] def ingestDir(
       s: org.apache.spark.sql.SparkSession, d: String): String =
-    ingestCache.computeIfAbsent(d, _ => {
-      val dir =
-        s"${graft.core.Scratch.dir("stream_ingest")}/${math.abs(d.hashCode)}"
+    graft.core.Scratch.onceDir("stream_ingest", d) { dir =>
       val docs = Tables.documents(s, d)
         .withColumn("sh", graft.ops.Text.shingles(col("text"), 3))
         .select("doc_id", "sh")
@@ -576,6 +532,5 @@ object StreamQueries {
         EventStream.nearDupIngestSink(dir, "doc_id", "sh")(
           docs.filter(col("doc_id") % 3 === b), b.toLong)
       }
-      dir
-    })
+    }
 }

@@ -25,20 +25,16 @@ object TextQueries {
     * q_dedup_incremental times the per-batch ingest, not the corpus
     * state build. Deterministic (seeded minhash), so caching cannot
     * change results. */
-  private val bandStateCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def bandState(
       s: org.apache.spark.sql.SparkSession, d: String)
       : org.apache.spark.sql.DataFrame = {
-    val path = bandStateCache.computeIfAbsent(d, _ => {
-      val dir = graft.core.Scratch.dir(s"band_state_${math.abs(d.hashCode)}")
+    val path = graft.core.Scratch.onceDir("band_state", d) { dir =>
       graft.ops.Dedup.bandedBuckets(
           Tables.documents(s, d).filter(col("doc_id") < 400)
             .withColumn("sh", Text.shingles(col("text"), 3)),
           "doc_id", col("sh"), numHashes = 64, bands = 16)
         .write.mode("overwrite").parquet(dir)
-      dir
-    })
+    }
     s.read.parquet(path)
   }
 
@@ -57,20 +53,15 @@ object TextQueries {
     * corpus pass is linear-safe, but re-paying the shingling REGEX
     * per call is a constant worth amortizing; every dedup-family
     * consumer of 3-shingles can feed from the same artifact). */
-  private val shingleCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[queries] def shingledDocs(
       s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame = {
-    val path = shingleCache.computeIfAbsent(d, _ => {
-      val dir =
-        s"${graft.core.Scratch.dir("shingled_docs")}/${math.abs(d.hashCode)}"
+    val path = graft.core.Scratch.onceDir("shingled_docs", d) { dir =>
       Tables.documents(s, d)
         .select(col("doc_id"),
           Text.shingles(col("text"), 3).as("__sh"))
         .write.mode("overwrite").parquet(dir)
-      dir
-    })
+    }
     s.read.parquet(path)
   }
   import QueryDef.{noOracle, sql}
@@ -230,11 +221,9 @@ object TextQueries {
     * q_bpe_* faces time vocab materialization / tokenization. 20 merge
     * rounds: one corpus pass for the word table + 20 vocabulary-sized
     * aggregations ([[graft.ops.Bpe.learnMerges]] scale notes). */
-  private val bpeCache = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[(String, String)]]()
   private[queries] def learnedMerges(
       s: org.apache.spark.sql.SparkSession, d: String): Seq[(String, String)] =
-    bpeCache.computeIfAbsent(d, _ =>
+    graft.core.Scratch.once(s"bpe_merges:$d")(
       graft.ops.Bpe.learnMerges(
         graft.ops.Bpe.wordCounts(Tables.documents(s, d), col("text")),
         numMerges = 20))
@@ -243,11 +232,9 @@ object TextQueries {
     * train-time-artifact contract as [[learnedMerges]]: one corpus
     * pass for the word table + 3 Viterbi-EM jobs over it
     * ([[graft.ops.Unigram.train]] scale notes). */
-  private val unigramCache = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[(String, Long)]]()
   private[queries] def learnedUnigram(
       s: org.apache.spark.sql.SparkSession, d: String): Seq[(String, Long)] =
-    unigramCache.computeIfAbsent(d, _ =>
+    graft.core.Scratch.once(s"unigram_vocab:$d")(
       graft.ops.Unigram.train(
         graft.ops.Bpe.wordCounts(Tables.documents(s, d), col("text")),
         vocabSize = 200))
@@ -1873,9 +1860,10 @@ object TextQueries {
       // paying the chain's most expensive map-side step twice. The
       // split pairs are unchanged: nearDupPairs distincts its input,
       // and distinct(distinct(sh)) = distinct(sh).
-      val kept2 = graft.core.LazyCheckpoint(
+      val kept2 =
         Dedup.decontaminateNearSh(kept1, "doc_id", col("text"),
-          evalSet, "eval_id", col("text"), threshold = 0.8, n = 3))
+          evalSet, "eval_id", col("text"), threshold = 0.8, n = 3)
+        .localCheckpoint()
       val pairs = Dedup.nearDupPairs(
         kept2, "doc_id", col("__tsh"), 0.8, 64, 16).select("a", "b")
       val splits = Dedup.clusterLabels(kept2.select("doc_id"), pairs)
@@ -2820,10 +2808,10 @@ object TextQueries {
         // Pinned: both rescore sides consume this frame, and without
         // the pin the shingle regex — the chain's most expensive
         // map-side step — ran twice over the corpus (round 18)
-        val sh = graft.core.LazyCheckpoint(
+        val sh =
           docs.select(col("doc_id"),
               array_distinct(Text.shingles(col("text"), 3)).as("__sh"))
-            .filter(size(col("__sh")) > 0))
+            .filter(size(col("__sh")) > 0).localCheckpoint()
         pairs
           .join(sh.select(col("doc_id").as("a"), col("__sh").as("__sa")),
             "a")
@@ -3002,10 +2990,10 @@ object TextQueries {
         .distinct()
       // hit-flagged anchored truth pairs feed the point estimate AND
       // the bootstrap — pin once
-      val pairs = graft.core.LazyCheckpoint(
+      val pairs =
         truth.join(cand.withColumn("__hit", lit(1)), Seq("a", "b"), "left")
           .select(col("a"), col("b"),
-            coalesce(col("__hit"), lit(0)).as("hit")))
+            coalesce(col("__hit"), lit(0)).as("hit")).localCheckpoint()
       val est = pairs.agg(
           count(lit(1)).as("n_true_sample"),
           sum(col("hit")).cast("long").as("n_caught_sample"))

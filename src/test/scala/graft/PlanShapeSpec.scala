@@ -268,7 +268,7 @@ class PlanShapeSpec extends AnyFunSuite {
       "count frame, never re-scanning the corpus") {
     // Catalyst does NOT reuse the count aggregate's exchange across
     // the four consumers (measured: 6 corpus scans without the
-    // checkpoint) — the LazyCheckpoint hides the single real scan
+    // checkpoint) — the localCheckpoint hides the single real scan
     // behind an ExistingRDD, so at most one (in practice zero) corpus
     // scan may be visible in the consuming plan
     val p = plan("q_pmi")
@@ -500,7 +500,7 @@ class PlanShapeSpec extends AnyFunSuite {
       "query batch)") {
     val p = plan("q_rrf_fusion")
     assert(count(p, "documents.parquet") == 0,
-      "lexical arm must read the LazyCheckpoint, not re-scan documents")
+      "lexical arm must read the localCheckpoint, not re-scan documents")
     assert(count(p, "embeddings.parquet") <= 2)
   }
 

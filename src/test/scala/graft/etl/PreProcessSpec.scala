@@ -85,7 +85,7 @@ class PreProcessSpec extends AnyFunSuite with WithSpark {
       keyOf("phenotype_GS001_DO002_PH003_HP:0000001") -> "ph_internal_3",
       keyOf("phenotype_GS002_DO004_PH004_HP:0000003") -> "ph_internal_4")
     val out = PreProcess.attachInternalId(
-      raw, PreProcess.ClinicalEntities("phenotype"),
+      raw, Indexes.ClinicalInputs.Entities.find(_.field == "phenotype").get,
       PreProcess.MapIds(spark, ids))
     val got = out.select("submitter_phenotype_id", "internal_phenotype_id")
       .as[(String, String)].collect().toMap

@@ -188,6 +188,29 @@ class GraphKernelSpec extends AnyFunSuite {
     }
   }
 
+  test("a Long.MinValue node id keeps its own node: connectedComponents " +
+    "and ancestorClosure kernels equal the distributed loops") {
+    // Long.MinValue is the kernels' empty-slot key; an id equal to it
+    // must not take another node's index
+    val lo = Long.MinValue
+    val e = Seq((lo, 7L), (3L, 4L), (7L, 8L)).toDF("a", "b")
+    val universe = Seq(lo, 3L, 4L, 7L, 8L, 9L).toDF("id")
+    for (nodes <- Seq(None, Some(universe))) {
+      val kernel = Graph.connectedComponents(e, nodes)
+      assertSame(kernel,
+        Graph.connectedComponents(e, nodes, smallGraphEdges = 0L),
+        s"connectedComponents(Long.MinValue,universe=${nodes.isDefined})")
+      val comp = kernel.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(comp(7L) == lo && comp(8L) == lo && comp(lo) == lo, comp)
+    }
+    // chain 9 → 7 → MinValue → 3 (child, anc)
+    val dag = Seq((9L, 7L), (7L, lo), (lo, 3L)).toDF("child", "anc")
+    val closure = Ontology.ancestorClosure(dag)
+    assertSame(closure, Ontology.ancestorClosure(dag, smallGraphEdges = 0L),
+      "ancestorClosure(Long.MinValue)")
+    assert(closure.count() == 6)
+  }
+
   test("ancestorClosure on an empty long-keyed edge frame is empty at " +
     "every gate") {
     val e = Seq.empty[(Long, Long)].toDF("child", "anc")
